@@ -49,7 +49,8 @@ def shingles(text: Column | str, k: int = 3) -> Column:
     doc), while the shifted-zip form references it k+1 times (O(k·n))
     — ~10× faster on real documents.
     """
-    toks = tokens(text)
+    c = F.col(text) if isinstance(text, str) else text
+    toks = tokens(c)
     n = F.size(toks)
     m = n - k + 1  # shingle count when n >= k
     combined = F.slice(toks, 1, m)
@@ -59,7 +60,10 @@ def shingles(text: Column | str, k: int = 3) -> Column:
             F.slice(toks, j + 1, m),
             lambda a, b: F.concat(a, F.lit(" "), b),
         )
-    return F.when(n < k, F.array(F.concat_ws(" ", toks))).otherwise(combined)
+    # null text has no shingles under every session config: with ANSI
+    # off, size(NULL) is -1 and would take the short-document branch
+    short = F.when(c.isNotNull(), F.array(F.concat_ws(" ", toks)))
+    return F.when(n < k, short).otherwise(combined)
 
 
 def normalize_url(url: Column | str) -> Column:

@@ -405,6 +405,14 @@ def ngram_jaccard_pairs(
     )
 
 
+def _set_or_empty(col: str):
+    """A shingle-set array column with NULL (missing endpoint or null
+    text) read as the empty set, so ``size`` of it is 0 under every
+    session config (``size(NULL)`` is NULL with ANSI on, -1 under
+    legacy ``sizeOfNull``)."""
+    return F.coalesce(F.col(col), F.array().cast("array<string>"))
+
+
 def jaccard_on_pairs(
     df: DataFrame,
     pairs: DataFrame,
@@ -453,17 +461,14 @@ def jaccard_on_pairs(
     sb = sets.select(F.col(id_col).alias("id_b"), F.col("_sh_set").alias("_sb"))
     # BOTH joins are left joins with null-safe sizes: an endpoint
     # missing from df (or a null text, whose shingle set is null) must
-    # return the promised jaccard = 0, never drop the pair. size(NULL)
-    # is NULL under Spark 4 defaults, so the coalesces cover both;
-    # casts keep the old COUNT(*) bigint arithmetic.
-    n_common = F.coalesce(
-        F.size(F.array_intersect("_sa", "_sb")).cast("long"),
-        F.lit(0).cast("long"),
-    )
+    # return the promised jaccard = 0, never drop the pair. The sets
+    # are coalesced to empty arrays BEFORE size(): size(NULL) is NULL
+    # only with ANSI on, and -1 under legacy sizeOfNull; casts keep the
+    # old COUNT(*) bigint arithmetic.
+    set_a, set_b = _set_or_empty("_sa"), _set_or_empty("_sb")
+    n_common = F.size(F.array_intersect(set_a, set_b)).cast("long")
     union = (
-        F.coalesce(F.size("_sa").cast("long"), F.lit(0).cast("long"))
-        + F.coalesce(F.size("_sb").cast("long"), F.lit(0).cast("long"))
-        - n_common
+        F.size(set_a).cast("long") + F.size(set_b).cast("long") - n_common
     )
     return (
         pairs.join(sa, "id_a", "left")
@@ -1302,14 +1307,12 @@ def containment_on_pairs(
     sb = sets.select(F.col(id_col).alias("id_b"), F.col("_sh_set").alias("_sb"))
     # null guards mirror the old left joins exactly: an id missing
     # from df (or a null text, whose shingle set is null) must score
-    # n=0 / cont=0.0, never drop the pair. size(NULL) is NULL under
-    # Spark 4 defaults, so the coalesces below cover both cases; casts
-    # keep the old COUNT(*) bigint schema.
-    n_common = F.coalesce(
-        F.size(F.array_intersect("_sa", "_sb")).cast("long"), F.lit(0).cast("long")
-    )
-    n_a = F.coalesce(F.size("_sa").cast("long"), F.lit(0).cast("long"))
-    n_b = F.coalesce(F.size("_sb").cast("long"), F.lit(0).cast("long"))
+    # n=0 / cont=0.0, never drop the pair — empty-array coalesces, as
+    # in jaccard_on_pairs; casts keep the old COUNT(*) bigint schema.
+    set_a, set_b = _set_or_empty("_sa"), _set_or_empty("_sb")
+    n_common = F.size(F.array_intersect(set_a, set_b)).cast("long")
+    n_a = F.size(set_a).cast("long")
+    n_b = F.size(set_b).cast("long")
     return (
         pairs.join(sa, "id_a", "left")
         .join(sb, "id_b", "left")

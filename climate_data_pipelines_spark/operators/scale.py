@@ -377,28 +377,37 @@ def spread_for_cpu(
     row's serialization cost (minhash/simhash families, not plain
     projections).
 
-    DERIVED frames short-circuit before the partition probe: the
-    ``df.rdd`` probe itself forces a full plan→RDD conversion of the
-    upstream chain — pure waste when the input has already passed a
-    shuffle (joins/aggregates/windows produce spark.sql.shuffle
-    .partitions-wide output; AQE may coalesce, but only because the
-    data is small enough not to need spreading). The check walks the
-    PHYSICAL plan (driver-side planning only, no jobs — and the
-    QueryExecution caches it, so a frame returned unchanged reuses
-    the work at action time) for a ``ShuffleExchangeExec`` on the
-    STREAMED path: broadcast subtrees are skipped, because a
-    broadcast hash join does not repartition the probe side — a
-    single-split scan joined against a broadcast dim still needs the
-    spread (round-6 advice; the earlier substring match on "Join "
-    skipped it, and could false-positive on literals/aliases).
+    DERIVED frames pass through untouched: an input that has already
+    passed a shuffle (joins/aggregates/windows produce
+    spark.sql.shuffle.partitions-wide output; AQE may coalesce, but
+    only because the data is small enough not to need spreading) is
+    detected by walking the PHYSICAL plan (driver-side planning only,
+    no jobs — and the QueryExecution caches it, so a frame returned
+    unchanged reuses the work at action time) for a
+    ``ShuffleExchangeExec`` on the STREAMED path: broadcast subtrees
+    are skipped, because a broadcast hash join does not repartition
+    the probe side — a single-split scan joined against a broadcast
+    dim still needs the spread (round-6 advice; the earlier substring
+    match on "Join " skipped it, and could false-positive on
+    literals/aliases).
+
+    PARTITION PROBE, job-free: with no shuffle on the streamed path,
+    the input's partition count is fixed by that path's leaves, so it
+    is read from the same planned query (``_streamed_width``): file
+    scan splits, checkpoint RDD partitions, ``CoalesceExec`` widths
+    and union sums, all driver-side objects. The probe runs no Spark
+    job, whereas ``df.rdd.getNumPartitions()`` converts the plan to an
+    RDD, which under AQE runs every upstream broadcast and shuffle
+    stage just to count partitions (13 of the 141 jobs of one curation
+    benchmark cycle, 4-core host), and the action then runs them
+    again. Only a plan shape the walk does not know asks ``df.rdd``.
 
     SIZE GATE (round-9): the repartition target is capped at one
     partition per ``chunk_bytes`` of the Catalyst size estimate
     (``optimizedPlan().stats().sizeInBytes`` — driver-side, free, and
     exact for file scans: it is the sum of the scanned file lengths).
-    When the capped target is ≤1 the function returns without even
-    the ``df.rdd`` partition probe (itself ~0.15 s of plan→RDD
-    conversion). The chunk default is 64 KB/core — MEASURED, twice:
+    When the capped target is ≤1 the function returns without the
+    partition probe. The chunk default is 64 KB/core — MEASURED, twice:
     the gate first shipped at 1 MiB on the assumption that the
     heaviest kernel runs ~1 CPU-s/MB, which held for the trigram LM
     (q177 2.86→0.9 s isolated from skipping the exchange) but not
@@ -425,7 +434,7 @@ def spread_for_cpu(
         if _streamed_side_has_shuffle(plan):
             return df
     except Exception:
-        pass  # internal-API probe failed: fall through to the rdd path
+        plan = None  # internal-API probe failed: fall back to the rdd path
     sc = df.sparkSession.sparkContext
     # 2× cores, not 1× (round-9 x1000 finding): a scan's SPLIT COUNT
     # can lie about usable parallelism — Spark sizes byte-range splits
@@ -469,7 +478,13 @@ def spread_for_cpu(
         pass  # estimate unavailable: keep the uncapped target
     if trigger <= 1:
         return df
-    if df.rdd.getNumPartitions() < trigger:
+    try:
+        parts = None if plan is None else _streamed_width(plan)
+    except Exception:
+        parts = None  # internal-API walk failed: use the rdd probe
+    if parts is None:
+        parts = df.rdd.getNumPartitions()
+    if parts < trigger:
         return df.repartition(width)
     return df
 
@@ -493,3 +508,53 @@ def _streamed_side_has_shuffle(jnode) -> bool:
         if _streamed_side_has_shuffle(it.next()):
             return True
     return False
+
+
+# leaves whose inputRDDs() are built on the driver from planning state
+# (file splits, an existing RDD, a range, local rows): no job runs
+_WIDTH_LEAVES = ("FileSourceScanExec", "RDDScanExec", "RangeExec", "LocalTableScanExec")
+
+
+def _streamed_width(jnode) -> int | None:
+    """Partition count of a physical plan with no shuffle on its
+    streamed path, read from driver-side plan objects only: the leaf
+    RDDs' partitions (file scan splits, checkpoint RDDs), the streamed
+    child of a broadcast hash join, ``CoalesceExec``'s min(n, child)
+    and the sum over a union's children. Every other unary node keeps
+    its child's partitioning. Returns None for a shape it does not
+    know (other leaves, other multi-child nodes, a partitioning-aware
+    union, a scan with dynamic partition pruning, whose split list
+    needs a subquery job); the caller then asks ``df.rdd``."""
+    name = jnode.getClass().getSimpleName()
+    children = jnode.children()
+    if name in _WIDTH_LEAVES:
+        if name == "FileSourceScanExec" and "dynamicpruning" in (
+            jnode.partitionFilters().toString().lower()
+        ):
+            return None
+        it = jnode.inputRDDs().iterator()
+        total = 0
+        while it.hasNext():
+            total += it.next().getNumPartitions()
+        return total
+    if name == "BroadcastHashJoinExec":
+        streamed = (
+            jnode.right() if jnode.buildSide().toString() == "BuildLeft" else jnode.left()
+        )
+        return _streamed_width(streamed)
+    if name == "UnionExec":
+        if jnode.outputPartitioning().getClass().getSimpleName() != "UnknownPartitioning":
+            return None  # partitioning-aware union: children are zipped
+        widths = [_streamed_width(children.apply(i)) for i in range(children.size())]
+        return None if None in widths else sum(widths)
+    if children.size() != 1 or name in (
+        "TakeOrderedAndProjectExec", "CollectLimitExec", "CollectTailExec"
+    ):
+        return None
+    child = _streamed_width(children.apply(0))
+    if name == "CoalesceExec" and child is not None:
+        # RDD.coalesce(n) without shuffle keeps min(n, child) splits;
+        # CoalesceExec turns an empty child into one empty partition
+        n = jnode.numPartitions()
+        return min(n, child) if child else int(n == 1)
+    return child

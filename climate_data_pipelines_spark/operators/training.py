@@ -343,8 +343,8 @@ def bloom_decontaminate(
     # the CPU-bound stage, and a small parquet file scans as ONE split
     # — without the spread the whole prefilter runs single-threaded
     # (the minhash lesson, operators/scale.py). Derived post-shuffle
-    # inputs short-circuit inside spread_for_cpu itself (no plan→RDD
-    # probe), so this is safe for any caller.
+    # inputs short-circuit inside spread_for_cpu itself, so this is
+    # safe for any caller.
     train_sh = spread_for_cpu(train, chunk_bytes=CPU_CHUNK_BYTES).select(
         F.col(id_col),
         F.explode(F.array_distinct(shingles(text_col, k))).alias("shingle"),

@@ -54,6 +54,7 @@ from climate_data_pipelines_spark.queries import (
 
 def neardup_dedup(
     df: DataFrame,
+    sigs: DataFrame,
     jaccard_threshold: float = 0.5,
     text_col: str = "text",
     id_col: str = "doc_id",
@@ -61,10 +62,12 @@ def neardup_dedup(
     """Verified near-dup dedup, keep the min id per cluster (the q122
     pipeline step packaged): signatures → banded candidates → exact
     Jaccard verify on candidate pairs only → connected components →
-    left-semi keep of the cluster representatives."""
+    left-semi keep of the cluster representatives. ``sigs`` are
+    ``df``'s MinHash signatures (``dedup.minhash_signatures`` with
+    k=3, MINHASH_N hashes), computed once by the caller, which reads
+    them again for its other consumers."""
     from climate_data_pipelines_spark.operators.scale import unpersist_checkpoint
 
-    sigs = dedup.minhash_signatures(df, k=3, n_hashes=MINHASH_N)
     cand = dedup.minhash_lsh_candidates(
         sigs, n_hashes=MINHASH_N, bands=MINHASH_BANDS
     ).localCheckpoint(eager=True)
@@ -423,6 +426,7 @@ def _write_dedup_index(
     containment: bool = False,
     domain_url_col: str | None = None,
     domain_stats_df: DataFrame | None = None,
+    signatures: DataFrame | None = None,
 ) -> None:
     """Persist the dedup state of the curated corpus — content digests
     (exact-dedup keys) and MinHash signatures (near-dup LSH input) —
@@ -437,6 +441,12 @@ def _write_dedup_index(
     short doc into one degenerate LSH band).
 
     ``kept`` must carry (doc_id, text).
+
+    The signatures come from ``signatures``, the run's MinHash frame
+    (computed once on the exact-dedup output, a superset of ``kept``),
+    restricted to ``kept``'s ids: a signature is a function of the text
+    alone, so the rows equal a re-hash of ``kept``. Only the rebuild
+    (self-heal) path passes None and re-hashes ``kept``'s text.
 
     WRITE ORDER IS LOAD-BEARING — the full commit sequence, in the
     order this function writes, is: (1) ``domain_stats`` (the gate's
@@ -497,9 +507,11 @@ def _write_dedup_index(
         domain_stats_df.write.mode(mode).parquet(
             f"{out_dir}/dedup_index/domain_stats"
         )
-    dedup.minhash_signatures(kept, k=3, n_hashes=MINHASH_N).write.mode(
-        mode
-    ).parquet(f"{out_dir}/dedup_index/signatures")
+    if signatures is None:
+        signatures = dedup.minhash_signatures(kept, k=3, n_hashes=MINHASH_N)
+    else:
+        signatures = signatures.join(kept.select("doc_id"), "doc_id", "left_semi")
+    signatures.write.mode(mode).parquet(f"{out_dir}/dedup_index/signatures")
     if url_col is not None:
         kept.select(
             "doc_id", normalize_url(F.col(url_col)).alias("url_norm")
@@ -657,7 +669,12 @@ def curate_corpus(
     # full scan+filter+digest chain (this one checkpoint cut the x100
     # end-to-end run 165 → 65 s)
     unique = dedup.exact_dedup(passed).localCheckpoint(eager=True)
-    neardup_free = neardup_dedup(unique, jaccard_threshold)
+    # MinHash each document ONCE (64 longs a doc, far smaller than the
+    # text): the near-dup LSH and the persisted index both read it
+    sigs = dedup.minhash_signatures(
+        unique, k=3, n_hashes=MINHASH_N
+    ).localCheckpoint(eager=True)
+    neardup_free = neardup_dedup(unique, sigs, jaccard_threshold)
     clean = training.bloom_decontaminate(
         neardup_free, bench, k=3, expected_items=20_000, fpp=0.01
     )
@@ -755,6 +772,7 @@ def curate_corpus(
         url_col=url_col,
         containment=containment,
         domain_stats_df=gate_stats,
+        signatures=sigs,
     )
     if pack_ctx_len:
         # pack what actually LANDED (read back from the shards, same
@@ -777,6 +795,7 @@ def curate_corpus(
 
         shutil.rmtree(f"{out_dir}/packing", ignore_errors=True)
     unpersist_checkpoint(mixed)
+    unpersist_checkpoint(sigs)
     unpersist_checkpoint(unique)
     if gate_ckpt is not None:
         unpersist_checkpoint(gate_ckpt)
@@ -1013,9 +1032,15 @@ def curate_increment(
     fresh = unique.withColumn("_d", digest).join(
         base_digests, "_d", "left_anti"
     ).drop("_d")
-    batch_clean = neardup_dedup(fresh, jaccard_threshold)
+    # the batch's MinHash signatures, once: within-batch near-dup, the
+    # cross-corpus LSH (batch_clean's rows) and the index append
+    # (landed rows) all read this frame
+    sigs = dedup.minhash_signatures(
+        fresh, k=3, n_hashes=MINHASH_N
+    ).localCheckpoint(eager=True)
+    batch_clean = neardup_dedup(fresh, sigs, jaccard_threshold)
 
-    sn = dedup.minhash_signatures(batch_clean, k=3, n_hashes=MINHASH_N)
+    sn = sigs.join(batch_clean.select("doc_id"), "doc_id", "left_semi")
     cand = dedup.minhash_lsh_candidates_cross(
         sn, sb, n_hashes=MINHASH_N, bands=MINHASH_BANDS
     ).localCheckpoint(eager=True)
@@ -1118,6 +1143,7 @@ def curate_increment(
         url_col=url_conf["url_col"] if url_conf else None,
         containment=bool(cont_conf),
         domain_stats_df=batch_stats,
+        signatures=sigs,
     )
     if pack_conf:
         # manifest-driven packing continuation (r13): the batch's
@@ -1158,6 +1184,7 @@ def curate_increment(
             )
         _rewrite_manifest(base_dir, manifest)
     unpersist_checkpoint(survivors)
+    unpersist_checkpoint(sigs)
     unpersist_checkpoint(unique)
     if batch_stats is not None:
         unpersist_checkpoint(batch_stats)

@@ -6334,372 +6334,6 @@ DRIVER_WINDOW: list[str] = [
     "q98_histogram",
 ]
 
-_ROUND12_WINDOW: list[str] = [
-    # retained for the rotation record (served as DRIVER_WINDOW in r12)
-    # (a) the two never-driver-checked leads (r11 additions, plans
-    # re-touched that round: two-level fold / distinct reseed)
-    "q187_kmeans_mix",
-    "q188_pca_project",
-    # (b) the complete r8-only stale cohort, registry order
-    "q05_numeric_validity",
-    "q10_left_outer_join",
-    "q11_left_semi_join",
-    "q12_left_anti_join",
-    "q14_distinct",
-    "q16_value_per_key",
-    "q18_count_distinct",
-    "q19_rollup",
-    "q20_filtered_agg",
-    "q22_neighbor_diff",
-    "q23_topk_per_group",
-    "q24_rolling_window",
-    "q25_union",
-    "q26_intersect",
-    "q27_except_all",
-    "q28_date_parts",
-    "q29_coord_arithmetic",
-    "q30_string_codec",
-    "q31_polygon_corners",
-    "q33_json_access",
-    "q35_tumbling_window",
-    "q37_minhash_lsh_candidates",
-    "q44_quality_score",
-    "q54_image_features",
-    "q72_minhash_lsh_ml",
-    "q85_merge_upsert",
-    "q86_latest_per_key",
-    "q87_variant_json",
-    "q88_hll_sketch_merge",
-    "q89_udtf_sentences",
-    "q91_cogrouped_asof",
-    "q96_stats_suite",
-    "q100_date_spine",
-    "q101_nearest_station",
-    "q103_regrid",
-    "q114_corpus_curation",
-    "q124_simhash_candidates",
-    "q126_semantic_dedup",
-    "q127_repeated_ngrams",
-    "q131_compression_ratio",
-    "q166_semantic_decontaminate",
-    "q180_corpus_datasheet",
-    # (c) six r9-only fillers (oldest remaining cohort, lowest risk:
-    # expression-only full-oracle suites)
-    "q40_ngram_jaccard",
-    "q41_minhash_signatures",
-    "q45_token_count",
-    "q46_fingerprint",
-    "q47_lang_id",
-    "q58_cube_grouping",
-]
-
-_ROUND11_WINDOW: list[str] = [
-    # retained for the rotation record (served as DRIVER_WINDOW in r11)
-    # (a) the five promised leads (r6-only driver rows)
-    "q83_time_rollup",
-    "q110_per_key_trend",
-    "q115_degree_days",
-    "q116_domain_upsample",
-    "q117_fractional_upsample",
-    # (b) the complete r7-only stale cohort, registry order
-    "q01_projection",
-    "q02_time_range",
-    "q03_null_drop",
-    "q04_mask_semi_join",
-    "q06_broadcast_lookup_join",
-    "q07_grid_semi_join",
-    "q08_grid_anti_join",
-    "q09_multiway_join",
-    "q13_partition_layout",
-    "q15_group_count",
-    "q17_agg_suite",
-    "q21_sort_limit",
-    "q32_geojson_feature",
-    "q34_python_udf",
-    "q36_exact_dedup",
-    "q38_cosine_topk",
-    "q39_word_count",
-    "q43_embedding_neardup",
-    "q48_asof_join",
-    "q49_range_join",
-    "q50_sliding_window",
-    "q51_session_window",
-    "q52_dedup_rows",
-    "q53_multimodal_meta",
-    "q56_pandas_udf",
-    "q57_grouped_pandas",
-    "q59_approx_count_distinct",
-    "q67_date_suite",
-    "q68_regexp_suite",
-    "q69_sample",
-    "q70_rank_suite",
-    "q84_stratified_sample",
-    "q90_dedup_clusters",
-    "q94_bitwise_null_suite",
-    "q102_anomaly",
-    "q104_time_weighted_avg",
-    "q105_locf_gapfill",
-    "q122_verified_dedup_clusters",
-    "q130_contamination_rate",
-    "q133_dsir_weights",
-    "q141_incremental_dedup",
-    "q161_pagerank",
-    "q167_image_neardup",
-    "q169_audio_neardup",
-    "q170_video_neardup",
-]
-
-_ROUND10_WINDOW: list[str] = [
-    # retained for the rotation record (served as DRIVER_WINDOW in r10)
-    # (a) the lead: never driver-checked, full oracle
-    "q186_c4_line_filter",
-    # (b) re-proofs of round-10-touched plans
-    "q177_trigram_lm_score",
-    "q181_perplexity_bucket_mix",
-    "q183_gopher_rules",
-    "q184_domain_reputation",
-    "q175_url_dedup",
-    "q73_ann_ivf_topk",
-    "q172_avi_mjpeg_frames",
-    # (c) the promised r5 expression suites
-    "q63_string_suite",
-    "q64_math_suite",
-    "q65_conditional_suite",
-    "q66_array_suite",
-    # (d) the r6 stale cohort: rows-only members first (recall/INV
-    # gated), then the oracle-bearing remainder
-    "q55_ann_lsh_topk",
-    "q140_pq_ann_topk",
-    "q156_approx_percentiles",
-    "q162_bpe_merges",
-    "q163_bpe_tokenize",
-    "q164_bpe_tokenize_ranked",
-    "q106_decontaminate",
-    "q107_hash_split",
-    "q108_pack_sequences",
-    "q109_tfidf_top_term",
-    "q111_vocab_topk",
-    "q112_shuffle_batches",
-    "q113_label_centroids",
-    "q118_bigram_lm_score",
-    "q119_line_dedup",
-    "q120_chunk_windows",
-    "q121_dedup_keep_longest",
-    "q125_token_budget_mix",
-    "q128_quality_select",
-    "q151_inverted_index",
-    "q165_binned_range_join",
-    "q168_temperature_mix",
-    "q171_shard_assign",
-    "q71_value_windows",
-    "q74_salted_skew_join",
-    "q75_salted_agg",
-    "q76_tile_rollup",
-    "q77_grouping_sets",
-    "q78_exists_subquery",
-    "q79_scalar_subquery",
-    "q80_redact",
-    "q81_repetition_ratio",
-    "q82_sentence_stats",
-    "q93_try_functions",
-    "q95_struct_update",
-    "q97_string_agg",
-    "q98_histogram",
-    "q99_map_suite",
-]
-
-_ROUND9_WINDOW: list[str] = [
-    # retained for the rotation record (served as DRIVER_WINDOW in r9)
-    # mid-round additions, never driver-checked, full oracle
-    "q182_cross_source_overlap",
-    "q183_gopher_rules",
-    "q184_domain_reputation",
-    "q185_contamination_report",
-    # (b) re-proofs of round-9-touched plans lead
-    "q177_trigram_lm_score",
-    "q178_simhash_capped_candidates",
-    "q181_perplexity_bucket_mix",
-    "q179_small_in_large_containment",
-    "q172_avi_mjpeg_frames",
-    "q136_edit_distance_verify",
-    "q174_warc_ingest",
-    "q173_quality_classifier",
-    # (c) pipeline-composition neighbors
-    "q175_url_dedup",
-    "q176_containment_neardup",
-    # (a) the complete r5-only stale cohort, oldest driver rows left
-    "q123_simhash_fingerprints",
-    "q129_minhash64_candidates",
-    "q132_repeated_spans",
-    "q134_strip_spans",
-    "q135_mvt_tiles",
-    "q137_sessionize",
-    "q138_stratified_sample",
-    "q139_bloom_decontaminate",
-    "q142_domain_cap",
-    "q143_quality_calibrate",
-    "q144_audio_features",
-    "q145_funnel",
-    "q146_retention",
-    "q147_gap_fill",
-    "q148_event_paths",
-    "q149_value_outliers",
-    "q150_bm25_topk",
-    "q152_gap_interpolate",
-    "q153_robust_outliers",
-    "q154_scd2_intervals",
-    "q155_jpeg_features",
-    "q157_video_features",
-    "q158_frame_sample",
-    "q159_weighted_sample",
-    "q160_heavy_hitters",
-    "q40_ngram_jaccard",
-    "q41_minhash_signatures",
-    "q42_simhash",
-    "q45_token_count",
-    "q46_fingerprint",
-    "q47_lang_id",
-    "q58_cube_grouping",
-    "q60_percentiles",
-    "q61_unpivot",
-    "q62_pivot",
-    "q92_land_mask_grid",
-    # round-10 leftover (yielded their r9 seats to q182-q185):
-    # q63_string_suite, q64_math_suite, q65_conditional_suite,
-    # q66_array_suite
-]
-
-_ROUND8_WINDOW: list[str] = [
-    # retained for the rotation record (served as DRIVER_WINDOW in r8)
-    "q173_quality_classifier",
-    "q174_warc_ingest",
-    # full r4-only cohort (stalest driver rows in any CORRECTNESS file)
-    "q05_numeric_validity",
-    "q100_date_spine",
-    "q101_nearest_station",
-    "q103_regrid",
-    "q10_left_outer_join",
-    "q114_corpus_curation",
-    "q11_left_semi_join",
-    "q12_left_anti_join",
-    "q131_compression_ratio",
-    "q14_distinct",
-    "q16_value_per_key",
-    "q18_count_distinct",
-    "q19_rollup",
-    "q20_filtered_agg",
-    "q22_neighbor_diff",
-    "q23_topk_per_group",
-    "q24_rolling_window",
-    "q25_union",
-    "q26_intersect",
-    "q27_except_all",
-    "q28_date_parts",
-    "q29_coord_arithmetic",
-    "q30_string_codec",
-    "q31_polygon_corners",
-    "q33_json_access",
-    "q35_tumbling_window",
-    "q44_quality_score",
-    "q54_image_features",
-    "q72_minhash_lsh_ml",
-    "q85_merge_upsert",
-    "q86_latest_per_key",
-    "q87_variant_json",
-    "q88_hll_sketch_merge",
-    "q89_udtf_sentences",
-    "q91_cogrouped_asof",
-    "q96_stats_suite",
-    # changed this round — must re-prove (scale-cliff fixes, candidate
-    # caps, semantic-dedup regression work)
-    "q176_containment_neardup",
-    "q177_trigram_lm_score",
-    "q126_semantic_dedup",
-    "q124_simhash_candidates",
-    "q136_edit_distance_verify",
-    "q166_semantic_decontaminate",
-    # oldest r5-only oracle queries (q132_repeated_spans, q40_ngram_
-    # jaccard and q123_simhash_fingerprints yielded their seats
-    # mid-round to the NEW oracle-green q178/q179/q180 — first driver
-    # rows beat a 4th re-proof of r5 queries that stay replay-checked;
-    # q123's fingerprint chain is covered bit-for-bit by q178 anyway)
-    "q37_minhash_lsh_candidates",
-    "q127_repeated_ngrams",
-    # mid-round additions: salt-capped simhash candidates, the
-    # prefix-filter small-in-large containment join, the per-source
-    # corpus datasheet, and CCNet perplexity-bucket mixing (first
-    # checks — q129_minhash64_candidates yielded the fourth seat;
-    # its plan is unchanged and judge-replay green every round)
-    "q178_simhash_capped_candidates",
-    "q179_small_in_large_containment",
-    "q180_corpus_datasheet",
-    "q181_perplexity_bucket_mix",
-]
-
-_ROUND7_WINDOW: list[str] = [
-    # retained for the rotation record (served as DRIVER_WINDOW in r7)
-    "q167_image_neardup",
-    "q169_audio_neardup",
-    "q170_video_neardup",
-    "q172_avi_mjpeg_frames",
-    # stale r4-only cohort scheduled by the round-6 note
-    "q102_anomaly",
-    "q104_time_weighted_avg",
-    "q105_locf_gapfill",
-    "q130_contamination_rate",
-    "q133_dsir_weights",
-    # changed this round — must re-prove (connected-components scale
-    # pass; edit-distance candidate length bucketing)
-    "q90_dedup_clusters",
-    "q122_verified_dedup_clusters",
-    "q141_incremental_dedup",
-    "q161_pagerank",
-    "q136_edit_distance_verify",
-    # r2-only queries (stalest oracle rows in any CORRECTNESS file)
-    "q67_date_suite",
-    "q68_regexp_suite",
-    "q70_rank_suite",
-    "q94_bitwise_null_suite",
-    # full r3-only cohort, oldest driver rows after the r2 four
-    "q01_projection",
-    "q02_time_range",
-    "q03_null_drop",
-    "q04_mask_semi_join",
-    "q06_broadcast_lookup_join",
-    "q07_grid_semi_join",
-    "q08_grid_anti_join",
-    "q09_multiway_join",
-    "q13_partition_layout",
-    "q15_group_count",
-    "q17_agg_suite",
-    "q21_sort_limit",
-    "q32_geojson_feature",
-    "q34_python_udf",
-    "q36_exact_dedup",
-    "q38_cosine_topk",
-    "q39_word_count",
-    "q43_embedding_neardup",
-    "q48_asof_join",
-    "q49_range_join",
-    "q50_sliding_window",
-    "q51_session_window",
-    "q52_dedup_rows",
-    "q53_multimodal_meta",
-    "q56_pandas_udf",
-    "q57_grouped_pandas",
-    "q59_approx_count_distinct",
-    "q69_sample",
-    "q84_stratified_sample",
-    # the three r4 fillers that held the window at 50 at rotation time
-    # (q05_numeric_validity/q100_date_spine/q101_nearest_station)
-    # yielded their seats mid-round to the NEW oracle-green operators
-    # — first driver rows beat a fourth re-proof of r4 queries that
-    # stay replay-checked (q103_regrid had already yielded to q172)
-    "q175_url_dedup",
-    "q176_containment_neardup",
-    "q177_trigram_lm_score",
-]
-
 
 def driver_ordered_names() -> list[str]:
     """Registry names with DRIVER_WINDOW first (window order), then the

@@ -107,6 +107,11 @@ def get_spark(
         # implement pushFilters — let the planner use it
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        # generated-code cache: one curation cycle compiles ~360 classes,
+        # so the 100-entry default missed every lookup (a warm
+        # curate_corpus recompiled 169 classes, curate_increment 195);
+        # 1000 holds the working set with headroom
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # quieter local runs
         .config("spark.ui.showConsoleProgress", "false")
     )

@@ -490,14 +490,24 @@ def write_training_shards(
     the manifest so incremental appends can reuse it — inferring it
     from observed shard sizes ratchets upward across increments
     because shards overshoot at document boundaries (round-6 advice).
+    A write that leaves no shard directory (an empty frame into a new
+    or overwritten ``out_dir``) raises ``ValueError``; the read-back
+    would otherwise die with an opaque schema-inference error. The
+    check lists the directory on the driver and runs no job.
     Returns the manifest dict.
     """
+    import glob
     import json
     import os
 
     from pyspark.sql import functions as F
 
     df.write.partitionBy("shard").mode(mode).parquet(f"{out_dir}/shards")
+    if not glob.glob(os.path.join(out_dir, "shards", "shard=*")):
+        raise ValueError(
+            f"no documents survived to the shard sink: {out_dir}/shards "
+            "is empty (every input document was dropped upstream)"
+        )
     spark = df.sparkSession
     rows = (
         spark.read.parquet(f"{out_dir}/shards")

@@ -514,6 +514,38 @@ def test_jaccard_on_pairs_keeps_zero_shingle_endpoints(spark):
     assert out[(1, 3)] == 1.0
 
 
+def test_pair_verifies_null_safe_with_ansi_off(spark):
+    """A null-text endpoint and an endpoint missing from ``df`` score
+    0 in both pair verifies with ANSI off and legacy sizeOfNull on,
+    where size(NULL) is -1, not NULL."""
+    docs = spark.createDataFrame(
+        [(1, "a b c d e"), (2, None), (3, None), (4, "a b c d f")],
+        "doc_id long, text string",
+    )
+    # 9 is not in docs
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (1, 9), (1, 4)], "id_a long, id_b long"
+    )
+    confs = {"spark.sql.ansi.enabled": "false", "spark.sql.legacy.sizeOfNull": "true"}
+    saved = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        jac = {(r.id_a, r.id_b): r.jaccard
+               for r in dedup.jaccard_on_pairs(docs, pairs, k=3).collect()}
+        cont = {(r.id_a, r.id_b): r
+                for r in dedup.containment_on_pairs(docs, pairs, k=3).collect()}
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert jac == {(1, 2): 0.0, (2, 3): 0.0, (1, 9): 0.0, (1, 4): 0.5}
+    for pair in [(1, 2), (2, 3), (1, 9)]:
+        r = cont[pair]
+        assert r.n_common == 0 and r.cont_a == 0.0 and r.cont_b == 0.0, pair
+        assert r.n_a >= 0 and r.n_b >= 0, pair
+    assert cont[(1, 4)].n_common == 2
+
+
 def test_normalize_url_canonicalizes_every_variant(spark):
     from climate_data_pipelines_spark.functions.text import normalize_url
 

@@ -591,10 +591,12 @@ def test_dedup_index_lockstep_and_self_heal(spark, sf_dir, tmp_path_factory):
 
     from climate_data_pipelines_spark.catalog import load_table
     from climate_data_pipelines_spark.functions.text import normalize_text
+    from climate_data_pipelines_spark.operators import dedup
     from climate_data_pipelines_spark.plans.llm_curation import (
         curate_corpus,
         curate_increment,
     )
+    from climate_data_pipelines_spark.queries import MINHASH_N
 
     docs = load_table(spark, sf_dir, "documents")
     day0_dir = str(tmp_path_factory.mktemp("idx_day0_src"))
@@ -616,6 +618,13 @@ def test_dedup_index_lockstep_and_self_heal(spark, sf_dir, tmp_path_factory):
         assert dig.exceptAll(want).isEmpty() and want.exceptAll(dig).isEmpty()
         # signatures cover exactly the docs wide enough to shingle
         assert sig.join(dig, "doc_id", "left_anti").isEmpty()
+        # the persisted signatures (taken from the run's MinHash frame,
+        # or re-hashed on a rebuild) equal a re-hash of the landed text
+        want_sig = dedup.minhash_signatures(
+            shards.select("doc_id", "text"), k=3, n_hashes=MINHASH_N
+        )
+        assert sig.exceptAll(want_sig).isEmpty()
+        assert want_sig.exceptAll(sig).isEmpty()
 
     index_in_lockstep()
 
@@ -651,6 +660,40 @@ def test_dedup_index_lockstep_and_self_heal(spark, sf_dir, tmp_path_factory):
     )
     curate_increment(spark, rerun, out)
     index_in_lockstep()
+
+
+def test_curate_corpus_no_survivor_raises_clear_error(spark, tmp_path):
+    """Every training document shares a 3-shingle with the benchmark
+    document, so decontamination drops them all: curate_corpus must
+    say no document survived, not die at the shard read-back with a
+    schema-inference error."""
+    from climate_data_pipelines_spark.plans.llm_curation import curate_corpus
+
+    bench = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    rows = [(0, bench, "en", "src0", len(bench))]
+    for i in range(1, 6):
+        text = "alpha beta gamma " + " ".join(f"w{i}x{j}" for j in range(12))
+        rows.append((i, text, "en", "src1", len(text)))
+    src = tmp_path / "src"
+    spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, source string, n_chars long"
+    ).write.parquet(str(src / "documents.parquet"))
+    with pytest.raises(ValueError, match="no documents survived"):
+        curate_corpus(spark, str(src), str(tmp_path / "out"))
+
+
+def test_repeat_curate_corpus_reuses_generated_code(spark, sf_dir, tmp_path):
+    """The session's generated-code cache holds a whole curation run:
+    a second identical curate_corpus compiles (almost) no new classes.
+    With Spark's 100-entry default it recompiled ~165."""
+    from climate_data_pipelines_spark.plans.llm_curation import curate_corpus
+
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiled = codegen.METRIC_COMPILATION_TIME()  # one count per class
+    curate_corpus(spark, sf_dir, str(tmp_path / "a"), tokens_per_shard=500)
+    before = compiled.getCount()
+    curate_corpus(spark, sf_dir, str(tmp_path / "b"), tokens_per_shard=500)
+    assert compiled.getCount() - before <= 10
 
 
 def test_cluster_mix_stage_unusable_embeddings_keep(spark):

@@ -171,7 +171,7 @@ def test_spread_for_cpu_broadcast_join_still_spreads(spark):
 def test_spread_for_cpu_shuffle_join_passthrough(spark):
     # a shuffle join's output is already shuffle.partitions-wide —
     # the structural probe must see the ShuffleExchange and return
-    # the frame untouched (no .rdd probe, no extra repartition)
+    # the frame untouched (no partition probe, no extra repartition)
     a = spark.range(100)
     b = spark.range(100).withColumnRenamed("id", "id2")
     joined = a.hint("merge").join(b, a.id == b.id2).drop("id2")
@@ -183,7 +183,7 @@ def test_spread_for_cpu_size_gate_skips_tiny_input(spark, tmp_path):
     """A sub-chunk_bytes scan must NOT be spread (round-9): the
     exchange + 32-task stage costs ~1 s at sf0.1 while even the
     heaviest kernel clears a sub-MiB input on one core in well under
-    that. The skip happens without the df.rdd partition probe."""
+    that. The skip happens without the partition probe."""
     src = str(tmp_path / "tiny")
     spark.range(1000).selectExpr("id", "repeat('x', 10) AS text").coalesce(
         1
@@ -246,3 +246,41 @@ def test_spread_for_cpu_trigger_2x_width_1x(spark):
     assert "roundrobin" in plan.lower()
     # ...but the width is one even wave, not two
     assert spread.rdd.getNumPartitions() == n
+
+
+def test_spread_for_cpu_probe_runs_no_job(spark, tmp_path):
+    """The partition probe reads the planned query's streamed-side
+    leaves (file splits, checkpoint RDDs, coalesce widths, union sums)
+    and launches no Spark job, yet reaches the decision the
+    ``df.rdd.getNumPartitions()`` probe reaches."""
+    sc = spark.sparkContext
+    src = str(tmp_path / "scan")
+    spark.range(5000).selectExpr("id", "repeat('y', 200) AS text").repartition(
+        3
+    ).write.parquet(src)
+    scan = spark.read.parquet(src)
+    ck = spark.range(2000).selectExpr(
+        "id", "repeat('z', 100) AS text"
+    ).repartition(5).localCheckpoint()
+    dim = spark.range(10).withColumnRenamed("id", "k")
+    cases = {
+        "file_scan": scan,
+        "checkpoint": ck,
+        "broadcast_join": ck.join(F.broadcast(dim), F.col("id") == F.col("k")).drop("k"),
+        "union": scan.unionByName(ck),
+        "coalesce": scan.coalesce(1),
+    }
+    trigger = 2 * sc.defaultParallelism
+    decisions = set()
+    for name, df in cases.items():
+        group = f"spread-probe-{name}"
+        sc.setJobGroup(group, "spread_for_cpu partition probe")
+        try:
+            spread = scale.spread_for_cpu(df, chunk_bytes=1)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name
+        spreads = df.rdd.getNumPartitions() < trigger
+        assert (spread is not df) == spreads, name
+        decisions.add(spreads)
+    assert decisions == {True, False}  # both outcomes are covered
