@@ -46,7 +46,7 @@ import math
 from pyspark.sql import DataFrame, functions as F
 
 from climate_data_pipelines_spark.functions.text import normalize_text, tokens
-from climate_data_pipelines_spark.operators.scale import local_df
+from climate_data_pipelines_spark.operators.scale import local_df, sum_partials
 
 # margins are clamped to ±MARGIN_CLIP before the sigmoid in BOTH the
 # engine and the numpy twin, so near-separable fits stay finite and
@@ -150,12 +150,13 @@ def _logreg_epoch_grad(fl: DataFrame, dim: int, w, id_col: str) -> DataFrame:
             )
             local = np.empty(len(uniq), dtype=np.int64)
             grow = 0
-            for j, dv in enumerate(uniq):  # unique docs per batch only
-                key = int(dv)
-                got = doc_index.get(key)
+            # unique docs per batch only; Python values as keys, so a
+            # string id works as well as a long one
+            for j, dv in enumerate(uniq.tolist()):
+                got = doc_index.get(dv)
                 if got is None:
                     got = len(doc_index)
-                    doc_index[key] = got
+                    doc_index[dv] = got
                     grow += 1
                 local[j] = got
             if grow:
@@ -212,8 +213,8 @@ def train_quality_classifier(
 
         fl(cached, hash(doc)) → mapInArrow kernel            [no exch]
           → (dim+1) gradient partials per task → collect
-            (direct under SPARK_GRAFT_LOGREG_DIRECT_PARTIALS,
-             feat-keyed aggregate above it)
+            (scale.sum_partials: direct under
+             DRIVER_LOCAL_MAX["logreg"], feat-keyed aggregate above it)
 
     The pre-r14 epoch spent 4-5 stages on the same result (weights
     broadcast join → doc-keyed margin aggregate → residual join →
@@ -256,48 +257,20 @@ def train_quality_classifier(
         fl.unpersist()
         raise ValueError("train_quality_classifier: no labeled documents")
 
-    import os
-
-    import numpy as np
-
-    # partial-collection policy, mirroring the k-means one: each epoch
-    # kernel emits (dim+1) gradient partial rows per task; when
-    # |partitions|·(dim+1) is under SPARK_GRAFT_LOGREG_DIRECT_PARTIALS
-    # (default 262144 rows ≈ 4 MB) they collect directly — ONE
-    # map-only job per epoch over the cached co-located table, no
-    # exchange at all; above it (cluster scale with thousands of
-    # cached partitions) a feat-keyed aggregate keeps driver traffic
-    # at the (dim+1)-row model size.
-    direct_cap = int(
-        os.environ.get("SPARK_GRAFT_LOGREG_DIRECT_PARTIALS", "262144")
-    )
-    direct = fl.rdd.getNumPartitions() * (dim + 1) <= direct_cap
-
     w = [0.0] * (dim + 1)
     acc = [0.0] * (dim + 1)
     for _ in range(max(1, epochs)):
         # fused epoch (r14): margins, residuals and the per-feature
         # gradient in ONE Arrow pass over the cached doc-partitioned
-        # table — see _logreg_epoch_grad. The weight vector rides the
-        # kernel closure ((dim+1) floats, the kmeans-centroid
-        # precedent), replacing the per-epoch broadcast table; the
-        # pre-r14 4-stage epoch plan (weights broadcast join → doc
-        # aggregate → residual join → feat aggregate) is retired with
-        # it.
-        stats = _logreg_epoch_grad(fl, dim, w, id_col)
-        gvec = np.zeros(dim + 1)
-        if direct:
-            pdf = stats.toPandas()
-            np.add.at(gvec, pdf["feat"].to_numpy(), pdf["g"].to_numpy())
-        else:
-            for r in stats.groupBy("feat").agg(
-                F.sum("g").alias("g")
-            ).collect():
-                gvec[r["feat"]] = r["g"]
-        grad = {i: float(gvec[i]) for i in range(dim + 1)}
+        # table (_logreg_epoch_grad; the weight vector rides the kernel
+        # closure), its (dim+1) partial rows per task summed by
+        # scale.sum_partials
+        grad = sum_partials(
+            _logreg_epoch_grad(fl, dim, w, id_col), "feat", ["g"], dim + 1, "logreg"
+        )["g"]
         sq = 0.0
         for i in range(dim + 1):
-            g = grad.get(i, 0.0) / n + l2 * w[i]
+            g = float(grad[i]) / n + l2 * w[i]
             sq += g * g
             acc[i] += g * g
             w[i] -= lr * g / math.sqrt(acc[i] + 1e-8)

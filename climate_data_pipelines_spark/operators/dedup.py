@@ -23,6 +23,7 @@ from climate_data_pipelines_spark.functions.scalar import oracle_round
 from climate_data_pipelines_spark.functions.text import normalize_text, shingles, tokens
 from climate_data_pipelines_spark.operators.scale import (
     CPU_CHUNK_BYTES,
+    fetch_if_small,
     localcheckpoint_capped,
     spread_for_cpu,
     unpersist_checkpoint,
@@ -430,6 +431,11 @@ def jaccard_on_pairs(
     → two id-keyed joins pairs⋈sets → size/array_intersect expressions
     per pair. Pairs sharing zero shingles still return (jaccard = 0)
     via a left join, so thresholding is the caller's choice.
+
+    Mega-documents: with each set kept as one array, a document with
+    millions of distinct shingles becomes one mega-row in the
+    pair-verify join, held whole by a single task, once per pair it
+    is in.
     """
     endpoints = pairs.select(F.col("id_a").alias(id_col)).unionByName(
         pairs.select(F.col("id_b").alias(id_col))
@@ -874,32 +880,22 @@ def dedup_rows(df: DataFrame, key_cols: list[str]) -> DataFrame:
 
 
 def _cc_driver_local(
-    sym: DataFrame, nodes: DataFrame | None, node_col: str
+    pdf, id_type, spark, nodes: DataFrame | None, node_col: str
 ) -> DataFrame:
-    """Exact driver-side union-find over a SMALL materialized edge
-    table — the broadcast-join analogue for connected components
-    (optimization guide §1.2: fix the distributed algorithm first;
-    §2.4: remove shuffles outright). The iterative min-label loop
+    """Exact driver-side union-find over the fetched symmetric
+    (src, dst) rows of a SMALL graph (at most
+    ``scale.DRIVER_LOCAL_MAX["cc"]``). The iterative min-label loop
     costs 2 checkpoint jobs + 1 Observation action per round — ~5
-    serial sub-second stages even on a 253-pair candidate graph —
-    while the answer (min member id per component, exact integer
-    arithmetic) is computable from one Arrow fetch of the pairs.
-    Results are IDENTICAL to the converged propagation: both produce
-    component = min node id over the connected component, and there
-    is no floating point anywhere. The endpoint labels are shipped
-    back via Arrow ``createDataFrame`` and the singleton attachment
-    is the same anti-join as the distributed path, against the
-    (small, broadcast) endpoint set.
-
-    Only called when the SYMMETRIC table's materialized row count is
-    under the ``SPARK_GRAFT_CC_LOCAL_MAX`` cap (default 200k rows =
-    100k pairs, ~20 MB of driver state; the same bounded-collect
-    budget a broadcast join gets). At 100 TB candidate scale the cap
-    keeps the distributed loop."""
+    serial sub-second stages even on a 253-pair candidate graph — for
+    an answer (min member id per component, exact integer arithmetic)
+    that one Arrow fetch of the pairs determines: labels are IDENTICAL
+    to the converged propagation's, with no floating point anywhere.
+    They ship back via Arrow ``createDataFrame``; singletons attach by
+    the distributed path's anti-join, against the (small, broadcast)
+    endpoint set. An empty edge table leaves only singletons."""
     import pandas as pd
+    from pyspark.sql import types as T
 
-    spark = sym.sparkSession
-    pdf = sym.toPandas()  # Arrow path; ≤ cap rows by contract
     parent: dict = {}
 
     def find(x):
@@ -924,19 +920,16 @@ def _cc_driver_local(
         if r not in comp_min or n < comp_min[r]:
             comp_min[r] = n
     rows = sorted((n, comp_min[find(n)]) for n in parent)
-    id_type = sym.schema["src"].dataType
-    from pyspark.sql import types as T
-
-    labels = spark.createDataFrame(
-        pd.DataFrame(rows, columns=[node_col, "component"]),
-        schema=T.StructType(
-            [
-                T.StructField(node_col, id_type),
-                T.StructField("component", id_type),
-            ]
-        ),
+    schema = T.StructType(
+        [T.StructField(node_col, id_type), T.StructField("component", id_type)]
     )
-    unpersist_checkpoint(sym)  # nothing references the edge table now
+    labels = spark.createDataFrame(
+        pd.DataFrame(rows, columns=[node_col, "component"]) if rows else [], schema
+    )
+    if not rows:
+        # an empty LocalRelation, pruned from the union and anti-join
+        # below, where an empty created frame is a Python RDD scan
+        labels = labels.limit(0)
     if nodes is not None:
         singletons = (
             nodes.select(F.col(nodes.columns[0]).alias(node_col))
@@ -956,7 +949,6 @@ def connected_components(
     node_col: str = "node",
     max_iter: int = 20,
     steps_per_checkpoint: int = 2,
-    local_max: int | None = None,
 ) -> DataFrame:
     """Connected components by iterative min-label propagation — the
     clustering step that turns pairwise near-dup candidates (MinHash/
@@ -1025,12 +1017,10 @@ def connected_components(
     handful of rounds — hitting the bound means the input is not the
     shallow cluster graph this is designed for.
 
-    ``local_max`` (default ``SPARK_GRAFT_CC_LOCAL_MAX`` env, 200k):
-    when the materialized symmetric edge table has at most this many
-    rows, the exact driver-side union-find (``_cc_driver_local``)
-    answers in one Arrow fetch instead of serial propagation rounds —
-    identical min-id labels, bounded driver state (the broadcast-join
-    budget). Pass 0 to force the distributed loop.
+    At or under ``scale.DRIVER_LOCAL_MAX["cc"]`` symmetric edge rows
+    the exact driver-side union-find (``_cc_driver_local``) answers
+    from one Arrow fetch instead of serial propagation rounds —
+    identical min-id labels, bounded driver state.
     """
     from pyspark.sql import Observation
 
@@ -1045,32 +1035,12 @@ def connected_components(
     sym = edges.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")).unionByName(
         edges.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
     )
-    sym = sym.localCheckpoint(eager=True)
+    # a small graph, the empty one included, goes to the driver
+    id_type = sym.schema["src"].dataType
+    pdf, sym = fetch_if_small(sym, "cc")
+    if pdf is not None:
+        return _cc_driver_local(pdf, id_type, edges.sparkSession, nodes, node_col)
     base = sym.select(F.col("src").alias(node_col)).distinct()
-    # one cheap count over the materialized checkpoint serves both the
-    # empty-edge short-circuit (was an isEmpty probe) and the
-    # small-graph dispatch below
-    n_sym = sym.count()
-    if n_sym == 0:
-        # no edges — every node is a singleton; skip the label
-        # checkpoint + propagation rounds entirely (a fully-deduped
-        # corpus otherwise pays several empty-frame checkpoint/
-        # Observation jobs per call)
-        empty = base.select(F.col(node_col), F.col(node_col).alias("component"))
-        if nodes is not None:
-            return nodes.select(
-                F.col(nodes.columns[0]).alias(node_col)
-            ).distinct().select(F.col(node_col), F.col(node_col).alias("component"))
-        return empty
-    if local_max is None:
-        import os
-
-        local_max = int(os.environ.get("SPARK_GRAFT_CC_LOCAL_MAX", "200000"))
-    if n_sym <= local_max:
-        # small candidate graph: exact driver union-find (identical
-        # min-id labels, one Arrow fetch) instead of ~5 serial
-        # checkpoint/Observation jobs — see _cc_driver_local
-        return _cc_driver_local(sym, nodes, node_col)
     # round 0 folded into initialization: component = least(node,
     # min neighbor) via ONE groupBy over the symmetric edge table —
     # the same result the generic step would produce from identity
@@ -1276,6 +1246,10 @@ def containment_on_pairs(
     ≥ |A|/|B| ≥ 0.5 and the standard bands fire. The LSH-invisible
     tiny-doc-in-huge-doc range is covered by the prefix-filter join
     ``containment_small_in_large`` (q179) below.
+
+    Mega-documents: as in ``jaccard_on_pairs``, each shingle set is one
+    array, so a mega-document becomes a mega-row in the pair-verify
+    join.
     """
     endpoints = pairs.select(F.col("id_a").alias(id_col)).unionByName(
         pairs.select(F.col("id_b").alias(id_col))

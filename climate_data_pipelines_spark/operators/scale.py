@@ -134,6 +134,97 @@ def localcheckpoint_capped(df: DataFrame) -> tuple[DataFrame, DataFrame]:
         return ck, ck
 
 
+# The driver-local budget of the dual-path operators (SURVEY.md §2.11,
+# the 100 TB design rule): at or under its cap an operator finishes on
+# the driver from one Arrow fetch; above it the distributed loop runs.
+# Read at call time, so a test can force either branch.
+DRIVER_LOCAL_MAX: dict[str, int] = {
+    # connected components: symmetric edge rows. 200k rows = 100k
+    # pairs, ~20 MB of union-find state, the bounded-collect budget a
+    # broadcast join gets; a 100 TB candidate graph exceeds it
+    "cc": 200_000,
+    # BPE training: distinct vocabulary words, the (word, count) table
+    # plus its symbol lists at the CC budget's scale; a production
+    # vocabulary exceeds it
+    "bpe": 200_000,
+    # k-means: per-task cluster-statistics partial rows, |tasks|·k
+    # (~25 MB at dim 384); above it (~800k scan tasks would be GBs) a
+    # (cluster, dim) aggregate keeps the collect at k·dim rows
+    "kmeans": 8_192,
+    # logistic regression: per-task gradient partial rows,
+    # |tasks|·(dim+1) (~4 MB); above it a feat-keyed aggregate keeps
+    # the collect at the (dim+1)-row model size
+    "logreg": 262_144,
+}
+
+
+def fetch_if_small(df: DataFrame, kind: str):
+    """Materialize ``df`` once and choose the branch for it under
+    ``DRIVER_LOCAL_MAX[kind]``.
+
+    A lazy ``localCheckpoint`` is materialized by the one ``count()``
+    that also sizes it: one job where an eager checkpoint followed by
+    a count ran two. At or under the cap this returns ``(pdf, None)``,
+    the Arrow fetch, and frees the checkpoint. Above it, it returns
+    ``(None, ckpt)``, the materialized frame; the distributed loop
+    frees it with ``unpersist_checkpoint`` once nothing reads it."""
+    ck = df.localCheckpoint(eager=False)
+    if ck.count() <= DRIVER_LOCAL_MAX[kind]:
+        pdf = ck.toPandas()
+        unpersist_checkpoint(ck)
+        return pdf, None
+    return None, ck
+
+
+def sum_partials(
+    stats: DataFrame, key: str, cols: list[str], rows_per_task: int, kind: str
+) -> dict:
+    """Per-key sums of an iterative operator's per-task partial rows
+    (k-means cluster statistics, logistic-regression gradients), where
+    every task emits one row per key ``0 .. rows_per_task-1``.
+
+    At or under ``DRIVER_LOCAL_MAX[kind]`` partial rows they are
+    fetched as they are (one map-only job, no exchange) and summed in
+    numpy. Above it a keyed Spark aggregate sums them first: one row
+    per key, or per (key, position) of the one array column allowed,
+    whose arrays share one non-zero width. Both branches return
+    ``{col: sums}`` of shape ``(rows_per_task,)``, or
+    ``(rows_per_task, width)`` for the array column; a key no row
+    carries sums to zero, and an empty frame gives zeros (width 0)."""
+    import numpy as np
+    from pyspark.sql.types import ArrayType
+
+    arrays = [c for c in cols if isinstance(stats.schema[c].dataType, ArrayType)]
+    scalars = [c for c in cols if c not in arrays]
+    out = {c: np.zeros(rows_per_task) for c in scalars}
+    direct = num_partitions(stats) * rows_per_task <= DRIVER_LOCAL_MAX[kind]
+    if direct or not arrays:
+        if not direct:
+            stats = stats.groupBy(key).agg(*[F.sum(c).alias(c) for c in cols])
+        pdf = stats.toPandas()
+        keys = pdf[key].to_numpy()
+        for c in scalars:
+            np.add.at(out[c], keys, pdf[c].to_numpy(dtype=np.float64))
+        for c in arrays:
+            vals = np.stack(pdf[c].to_numpy()) if len(pdf) else np.zeros((0, 0))
+            out[c] = np.zeros((rows_per_task, vals.shape[1]))
+            np.add.at(out[c], keys, vals)
+        return out
+    (arr,) = arrays
+    pdf = (
+        stats.select(key, *scalars, F.posexplode(arr).alias("_pos", "_x"))
+        .groupBy(key, "_pos")
+        .agg(F.sum("_x").alias("_x"), *[F.sum(c).alias(c) for c in scalars])
+        .toPandas()
+    )
+    keys, pos = pdf[key].to_numpy(), pdf["_pos"].to_numpy()
+    for c in scalars:
+        out[c][keys[pos == 0]] = pdf[c].to_numpy(dtype=np.float64)[pos == 0]
+    out[arr] = np.zeros((rows_per_task, int(pos.max()) + 1 if len(pos) else 0))
+    out[arr][keys, pos] = pdf["_x"].to_numpy(dtype=np.float64)
+    return out
+
+
 def salted_join(
     fact: DataFrame,
     dim: DataFrame,
@@ -391,16 +482,10 @@ def spread_for_cpu(
     match on "Join " skipped it, and could false-positive on
     literals/aliases).
 
-    PARTITION PROBE, job-free: with no shuffle on the streamed path,
-    the input's partition count is fixed by that path's leaves, so it
-    is read from the same planned query (``_streamed_width``): file
-    scan splits, checkpoint RDD partitions, ``CoalesceExec`` widths
-    and union sums, all driver-side objects. The probe runs no Spark
-    job, whereas ``df.rdd.getNumPartitions()`` converts the plan to an
-    RDD, which under AQE runs every upstream broadcast and shuffle
-    stage just to count partitions (13 of the 141 jobs of one curation
-    benchmark cycle, 4-core host), and the action then runs them
-    again. Only a plan shape the walk does not know asks ``df.rdd``.
+    PARTITION PROBE, job-free: ``num_partitions`` reads the input's
+    partition count from the same planned query's streamed-side leaves
+    (file scan splits, checkpoint RDD partitions, ``CoalesceExec``
+    widths and union sums), all driver-side objects.
 
     SIZE GATE (round-9): the repartition target is capped at one
     partition per ``chunk_bytes`` of the Catalyst size estimate
@@ -424,17 +509,10 @@ def spread_for_cpu(
     to skipping the spread.
     """
     try:
-        # executedPlan, not sparkPlan: exchanges are only inserted by
-        # the EnsureRequirements preparation rule. Under AQE the root
-        # is AdaptiveSparkPlanExec — probe its initial plan (planning
-        # is driver-side and cached on the QueryExecution; no jobs)
-        plan = df._jdf.queryExecution().executedPlan()
-        if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
-            plan = plan.initialPlan()
-        if _streamed_side_has_shuffle(plan):
+        if _streamed_side_has_shuffle(_planned(df)):
             return df
     except Exception:
-        plan = None  # internal-API probe failed: fall back to the rdd path
+        pass  # internal-API probe failed: num_partitions asks df.rdd
     sc = df.sparkSession.sparkContext
     # 2× cores, not 1× (round-9 x1000 finding): a scan's SPLIT COUNT
     # can lie about usable parallelism — Spark sizes byte-range splits
@@ -478,15 +556,38 @@ def spread_for_cpu(
         pass  # estimate unavailable: keep the uncapped target
     if trigger <= 1:
         return df
-    try:
-        parts = None if plan is None else _streamed_width(plan)
-    except Exception:
-        parts = None  # internal-API walk failed: use the rdd probe
-    if parts is None:
-        parts = df.rdd.getNumPartitions()
-    if parts < trigger:
+    if num_partitions(df) < trigger:
         return df.repartition(width)
     return df
+
+
+def _planned(df: DataFrame):
+    """The physical plan of ``df`` with its exchanges (executedPlan, not
+    sparkPlan; under AQE the initial plan). Planning is driver-side and
+    cached on the QueryExecution for ``df``'s own action; no job runs."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.initialPlan()
+    return plan
+
+
+def num_partitions(df: DataFrame) -> int:
+    """``df.rdd.getNumPartitions()`` without a Spark job: with no
+    shuffle on the streamed path the count is read from that path's
+    leaves (``_streamed_width``). ``df.rdd`` converts the plan to an
+    RDD, which under AQE runs every upstream broadcast and shuffle
+    stage just to count partitions (13 of the 141 jobs of one curation
+    benchmark cycle, 4-core host); it is asked only for a plan with a
+    streamed shuffle or a shape the walk does not know."""
+    try:
+        plan = _planned(df)
+        if not _streamed_side_has_shuffle(plan):
+            parts = _streamed_width(plan)
+            if parts is not None:
+                return parts
+    except Exception:
+        pass  # internal-API walk failed: use the rdd probe
+    return df.rdd.getNumPartitions()
 
 
 def _streamed_side_has_shuffle(jnode) -> bool:
@@ -518,7 +619,8 @@ _WIDTH_LEAVES = ("FileSourceScanExec", "RDDScanExec", "RangeExec", "LocalTableSc
 def _streamed_width(jnode) -> int | None:
     """Partition count of a physical plan with no shuffle on its
     streamed path, read from driver-side plan objects only: the leaf
-    RDDs' partitions (file scan splits, checkpoint RDDs), the streamed
+    RDDs' partitions (file scan splits, checkpoint RDDs, a materialized
+    cache's buffers), the streamed
     child of a broadcast hash join, ``CoalesceExec``'s min(n, child)
     and the sum over a union's children. Every other unary node keeps
     its child's partitioning. Returns None for a shape it does not
@@ -537,6 +639,12 @@ def _streamed_width(jnode) -> int | None:
         while it.hasNext():
             total += it.next().getNumPartitions()
         return total
+    if name == "InMemoryTableScanExec":
+        # a cached frame's partitions are known once it is materialized
+        builder = jnode.relation().cacheBuilder()
+        if not builder.isCachedColumnBuffersLoaded():
+            return None
+        return builder.cachedColumnBuffers().getNumPartitions()
     if name == "BroadcastHashJoinExec":
         streamed = (
             jnode.right() if jnode.buildSide().toString() == "BuildLeft" else jnode.left()

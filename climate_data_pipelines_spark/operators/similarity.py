@@ -12,13 +12,16 @@ the full cross product; multiprobe = explode over neighbor buckets.
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from climate_data_pipelines_spark.functions.scalar import oracle_round
-from climate_data_pipelines_spark.operators.scale import local_df, spread_for_cpu
+from climate_data_pipelines_spark.operators.scale import (
+    local_df,
+    num_partitions,
+    spread_for_cpu,
+    sum_partials,
+)
 from climate_data_pipelines_spark.functions.vectors import (
     cosine_similarity,
     dot,
@@ -1326,12 +1329,12 @@ def kmeans_clusters(
         (count, Σx, Σd2) sufficient statistics in numpy as it assigns
         — the map-side combine the pre-r14 plan paid a JVM posexplode
         (n·dim rows) + hash aggregate for. Per task the output is k
-        rows; under SPARK_GRAFT_KMEANS_DIRECT_PARTIALS total partial
-        rows they are collected directly (one map-only job per round,
-        no exchange), above it they posexplode to (cluster, dim) and
-        keep the old corpus-size-independent k·dim collect (the
-        classifier's (dim+1)-float gradient precedent,
-        operators/classifier.py).
+        rows, summed by ``scale.sum_partials``: at or under
+        ``scale.DRIVER_LOCAL_MAX["kmeans"]`` total partial rows they
+        are collected directly (one map-only job per round, no
+        exchange), above it they posexplode to (cluster, dim) and keep
+        the corpus-size-independent k·dim collect (the classifier's
+        (dim+1)-float gradient precedent, operators/classifier.py).
       - empty clusters re-seed deterministically to up to |empty|
         DISTINCT farthest points (desc d2, min-id tiebreak; the
         `_pq_codebooks` rule in distributed form) — one extra
@@ -1399,60 +1402,22 @@ def kmeans_clusters(
     if len(C) < k:
         C = C[np.arange(k) % len(C)]
 
-    # Per-round update path (r13 verdict item 3): assign + per-cluster
-    # sufficient statistics FUSED into one mapInArrow pass
-    # (`_kmeans_round_stats`) — the JVM posexplode (n·dim rows) + hash
-    # aggregate per round is replaced by numpy accumulation inside the
-    # kernel that was already touching every vector. Per-task output is
-    # k rows, so |tasks|·k partial rows remain. Driver traffic policy:
-    #   - |tasks|·k under SPARK_GRAFT_KMEANS_DIRECT_PARTIALS (default
-    #     8192 rows ≈ 25 MB at dim 384): toPandas the partials
-    #     directly — ONE map-only job per round, no exchange at all;
-    #   - above it (cluster scale: ~800k scan tasks would be GBs of
-    #     driver traffic): posexplode the partials to (cluster, dim)
-    #     rows and keep the old corpus-size-independent k·dim collect —
-    #     the exchange now carries |tasks|·k·dim pre-combined rows, not
-    #     the corpus.
-    direct_cap = int(
-        os.environ.get("SPARK_GRAFT_KMEANS_DIRECT_PARTIALS", "8192")
-    )
-    direct = vecs.rdd.getNumPartitions() * k <= direct_cap
+    # each round: one fused assign+statistics pass, k partial rows per
+    # task, summed by scale.sum_partials (see the docstring)
     inertia: list[float] = []
     for _ in range(iters):
-        stats = _kmeans_round_stats(vecs, vec_col, C)
-        sums = np.zeros((k, dim))
-        counts = np.zeros(k)
-        sd2s = np.zeros(k)
-        if direct:
-            pdf = stats.toPandas()
-            cl = pdf["cluster"].to_numpy()
-            np.add.at(counts, cl, pdf["n"].to_numpy())
-            np.add.at(sd2s, cl, pdf["sd2"].to_numpy())
-            np.add.at(sums, cl, np.stack(pdf["sx"].to_numpy()))
-        else:
-            per_dim = (
-                stats.select(
-                    "cluster", "n", "sd2",
-                    F.posexplode("sx").alias("dim", "x"),
-                )
-                .groupBy("cluster", "dim")
-                .agg(F.sum("x").alias("sx"), F.sum("n").alias("n"),
-                     F.sum("sd2").alias("sd2"))
-            )
-            pdf = per_dim.toPandas()
-            cl = pdf["cluster"].to_numpy()
-            dm = pdf["dim"].to_numpy()
-            sums[cl, dm] = pdf["sx"].to_numpy()
-            d0 = pdf["dim"] == 0
-            counts[pdf.loc[d0, "cluster"]] = pdf.loc[d0, "n"].to_numpy()
-            sd2s[pdf.loc[d0, "cluster"]] = pdf.loc[d0, "sd2"].to_numpy()
-        total_d2 = float(sd2s.sum())
-        inertia.append(float(total_d2))
+        part = sum_partials(
+            _kmeans_round_stats(vecs, vec_col, C),
+            "cluster", ["n", "sd2", "sx"], k, "kmeans",
+        )
+        counts, sums = part["n"], part["sx"]
+        inertia.append(float(part["sd2"].sum()))
         nonempty = counts > 0
         C_prev = C
-        C = np.where(
-            nonempty[:, None], sums / np.maximum(counts, 1)[:, None], C
-        )
+        if nonempty.any():  # else no sums (width 0): the reseed reports it
+            C = np.where(
+                nonempty[:, None], sums / np.maximum(counts, 1)[:, None], C
+            )
         if nonempty.all() and np.array_equal(C, C_prev):
             # exact fixpoint (and no reseed pending): every remaining
             # round would recompute the identical assignment, the
@@ -1669,7 +1634,7 @@ def pca_fit(
     # measured ×4 on the dim-768 fixture (2.8 → 11.1 s) — it only
     # pays when P/64 rows amortize it, which is exactly when it is
     # needed.
-    if vecs.rdd.getNumPartitions() > prefold_threshold:
+    if num_partitions(vecs) > prefold_threshold:
         partials = (
             partials.withColumn("_p", F.spark_partition_id() % 64)
             .groupBy("i", "_p")

@@ -20,6 +20,7 @@ from climate_data_pipelines_spark.functions.text import (
 )
 from climate_data_pipelines_spark.operators.scale import (
     CPU_CHUNK_BYTES,
+    fetch_if_small,
     local_df,
     spread_for_cpu,
     unpersist_checkpoint,
@@ -771,6 +772,9 @@ def _bpe_merge_fold_sql(inner: str, left: str, right: str) -> str:
     )
 
 
+_MERGE_SCHEMA = "merge_idx int, left string, right string, pair_count bigint"
+
+
 def _bpe_train_local(
     words: list,
     counts: list,
@@ -862,7 +866,6 @@ def bpe_train(
     end_marker: str = "</w>",
     batch_m: int = 1,
     candidate_factor: int = 4,
-    local_max: int | None = None,
 ) -> DataFrame:
     """Distributed BPE tokenizer training (Sennrich et al.): learn
     ``n_merges`` byte-pair merges from the corpus — the tokenizer-
@@ -908,52 +911,28 @@ def bpe_train(
     Rounds drop from n_merges to ~n_merges/batch_m
     (tools/bpe_scale_proof.py measures a 1,000-merge train).
 
-    ``local_max`` (default ``SPARK_GRAFT_BPE_LOCAL_MAX`` env, 200k):
-    when the vocabulary has at most this many distinct words, the
+    At or under ``scale.DRIVER_LOCAL_MAX["bpe"]`` distinct words the
     merge loop runs driver-side over one Arrow fetch of the (word,
     count) table (``_bpe_train_local`` — bit-identical by
     construction, parity-tested against the forced-distributed loop)
-    instead of ~n_merges/batch_m serial Spark jobs. Pass 0 to force
-    the distributed loop; at 100 TB the vocabulary exceeds any sane
-    cap and the distributed loop is the path.
+    instead of ~n_merges/batch_m serial Spark jobs; at 100 TB the
+    vocabulary exceeds the cap and the distributed loop is the path.
     """
     spark = df.sparkSession
     # ONE corpus pass builds the vocabulary-sized (word, count) table;
-    # the lazy checkpoint materializes during the count() below, which
-    # also serves the local-vs-distributed dispatch (the CC pattern).
-    wc = (
+    # its count() both materializes it and sizes it for the dispatch
+    pdf, wc = fetch_if_small(
         df.select(F.explode(tokens(text_col)).alias("word"))
         .groupBy("word")
-        .agg(F.count("*").alias("w_count"))
-        .localCheckpoint(eager=False)
+        .agg(F.count("*").alias("w_count")),
+        "bpe",
     )
-    if local_max is None:
-        import os
-
-        local_max = int(os.environ.get("SPARK_GRAFT_BPE_LOCAL_MAX", "200000"))
-    n_vocab = wc.count()
-    if n_vocab <= local_max:
-        # small vocabulary: the whole merge loop runs driver-side over
-        # one Arrow fetch (bit-identical by construction — see
-        # _bpe_train_local) instead of ~n_merges/batch_m serial Spark
-        # jobs. Driver state is the capped (word, count) table + its
-        # symbol lists — the broadcast-budget scale the CC local path
-        # already set as precedent. At 100 TB the vocabulary exceeds
-        # the cap and the distributed loop below is the path.
-        pdf = wc.toPandas()
-        unpersist_checkpoint(wc)
+    if pdf is not None:
         merges = _bpe_train_local(
-            pdf["word"].tolist(),
-            pdf["w_count"].tolist(),
-            n_merges,
-            end_marker,
-            batch_m,
-            candidate_factor,
+            pdf["word"].tolist(), pdf["w_count"].tolist(),
+            n_merges, end_marker, batch_m, candidate_factor,
         )
-        return local_df(
-            spark, merges,
-            "merge_idx int, left string, right string, pair_count bigint",
-        )
+        return local_df(spark, merges, _MERGE_SCHEMA)
     # LAZY checkpoints throughout the train loop (r14, guide §2.6 "one
     # job where two ran serially"): the eager checkpoint per round was
     # a full barrier job that materialized the folded word table and
@@ -1036,10 +1015,7 @@ def bpe_train(
     # Arrow-path creation (scale.local_df): the pickled-list path
     # re-ran 32 Python-worker tasks on EVERY action over this table
     # (~0.33 s per collect — q164 pays one per bench repeat)
-    return local_df(
-        spark, merges,
-        "merge_idx int, left string, right string, pair_count bigint",
-    )
+    return local_df(spark, merges, _MERGE_SCHEMA)
 
 
 def bpe_encode(

@@ -10,7 +10,7 @@ import zlib
 import pytest
 from pyspark.sql import functions as F
 
-from climate_data_pipelines_spark.operators import classifier
+from climate_data_pipelines_spark.operators import classifier, scale
 
 
 @pytest.fixture(scope="module")
@@ -91,6 +91,51 @@ def test_numpy_twin_parity(spark, toy):
     assert scale > 0
     max_rel = max(abs(a - b) for a, b in zip(w_spark, w_np)) / scale
     assert max_rel < 1e-9, max_rel
+
+
+def _weights(rows, dim):
+    w = [0.0] * (dim + 1)
+    for r in rows:
+        w[r["feat"]] = r["weight"]
+    return w
+
+
+def _train(toy, dim=64):
+    labels = toy.select(
+        "doc_id", (F.col("doc_id") % 2 == 0).cast("int").alias("label")
+    )
+    feats = classifier.hashed_features(toy, dim=dim)
+    return _weights(
+        classifier.train_quality_classifier(feats, labels, dim=dim).collect(),
+        dim,
+    )
+
+
+def test_aggregate_gradient_matches_direct(spark, toy, monkeypatch):
+    # both partial-sum branches of scale.sum_partials: the direct
+    # collect (default budget) and the feat-keyed aggregate (a zero
+    # "logreg" budget) train the same weights
+    direct = _train(toy)
+    monkeypatch.setitem(scale.DRIVER_LOCAL_MAX, "logreg", 0)
+    agg = _train(toy)
+    assert max(abs(a - b) for a, b in zip(agg, direct)) < 1e-9
+
+
+def test_string_ids_train_same_weights(spark, toy):
+    # the epoch kernel keys documents on the raw id value, so a string
+    # id column trains (int(id) used to crash the kernel)
+    dim = 64
+    doc = F.concat(F.lit("doc-"), F.col("doc_id")).alias("doc_id")
+    labels = toy.select(
+        doc, (F.col("doc_id") % 2 == 0).cast("int").alias("label")
+    )
+    feats = classifier.hashed_features(toy.select(doc, "text"), dim=dim)
+    got = _weights(
+        classifier.train_quality_classifier(feats, labels, dim=dim).collect(),
+        dim,
+    )
+    want = _train(toy, dim)
+    assert max(abs(a - b) for a, b in zip(got, want)) < 1e-9
 
 
 def test_train_raises_without_labels(spark, toy):

@@ -2,7 +2,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from climate_data_pipelines_spark.operators import dedup
+from climate_data_pipelines_spark.operators import dedup, scale
 
 
 def _docs(spark, rows):
@@ -124,7 +124,7 @@ def test_connected_components_chain_and_singletons(spark):
     assert out[20] == 20 and out[30] == 30
 
 
-def test_connected_components_local_vs_distributed_parity(spark):
+def test_connected_components_local_vs_distributed_parity(spark, monkeypatch):
     # the driver-local union-find fast path must produce EXACTLY the
     # distributed min-label propagation's output on the same graph —
     # chains, merges, duplicate/reversed edges, and singletons
@@ -141,12 +141,31 @@ def test_connected_components_local_vs_distributed_parity(spark):
         (r.node, r.component)
         for r in dedup.connected_components(edges, nodes).collect()
     )
+    monkeypatch.setitem(scale.DRIVER_LOCAL_MAX, "cc", 0)
     dist = sorted(
         (r.node, r.component)
-        for r in dedup.connected_components(edges, nodes, local_max=0).collect()
+        for r in dedup.connected_components(edges, nodes).collect()
     )
     assert local == dist
     assert dict(local)[42] == 40
+
+
+def test_connected_components_local_build_runs_at_most_three_jobs(spark):
+    # the edge table's lazy checkpoint is materialized by the count
+    # that sizes it (scale.fetch_if_small): no separate eager
+    # checkpoint job ahead of the count and the Arrow fetch
+    sc = spark.sparkContext
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 11)], "id_a long, id_b long"
+    )
+    group = "cc-local-build"
+    sc.setJobGroup(group, "connected_components driver-local build")
+    try:
+        labels = dedup.connected_components(edges)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(list(sc.statusTracker().getJobIdsForGroup(group))) <= 3
+    assert {r.component for r in labels.collect()} == {1}
 
 
 def test_connected_components_transitive_merge(spark):
@@ -156,7 +175,7 @@ def test_connected_components_transitive_merge(spark):
     assert out == {1: 1, 2: 1, 3: 1}
 
 
-def test_connected_components_raises_when_iteration_bound_hit(spark):
+def test_connected_components_raises_when_iteration_bound_hit(spark, monkeypatch):
     # a 6-node chain needs ~3 min-label rounds; max_iter=1 must raise
     # instead of silently returning split components
     import pytest
@@ -164,10 +183,12 @@ def test_connected_components_raises_when_iteration_bound_hit(spark):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 6)], "id_a long, id_b long"
     )
-    # local_max=0 pins the DISTRIBUTED path: the driver-local
-    # union-find (default for graphs this small) always converges
+    # a zero driver-local budget pins the DISTRIBUTED path: the
+    # driver-local union-find (default for graphs this small) always
+    # converges
+    monkeypatch.setitem(scale.DRIVER_LOCAL_MAX, "cc", 0)
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components(edges, max_iter=1, local_max=0)
+        dedup.connected_components(edges, max_iter=1)
 
 
 def test_exact_dedup_best_keeps_highest_score_then_min_id(spark):

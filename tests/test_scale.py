@@ -250,9 +250,10 @@ def test_spread_for_cpu_trigger_2x_width_1x(spark):
 
 def test_spread_for_cpu_probe_runs_no_job(spark, tmp_path):
     """The partition probe reads the planned query's streamed-side
-    leaves (file splits, checkpoint RDDs, coalesce widths, union sums)
-    and launches no Spark job, yet reaches the decision the
-    ``df.rdd.getNumPartitions()`` probe reaches."""
+    leaves (file splits, checkpoint RDDs, a materialized cache,
+    coalesce widths, union sums) and launches no Spark job, yet
+    reaches the decision the ``df.rdd.getNumPartitions()`` probe
+    reaches."""
     sc = spark.sparkContext
     src = str(tmp_path / "scan")
     spark.range(5000).selectExpr("id", "repeat('y', 200) AS text").repartition(
@@ -263,12 +264,17 @@ def test_spread_for_cpu_probe_runs_no_job(spark, tmp_path):
         "id", "repeat('z', 100) AS text"
     ).repartition(5).localCheckpoint()
     dim = spark.range(10).withColumnRenamed("id", "k")
+    cached = spark.range(3000).selectExpr(
+        "id", "repeat('c', 100) AS text"
+    ).repartition(6).persist()
+    cached.count()
     cases = {
         "file_scan": scan,
         "checkpoint": ck,
         "broadcast_join": ck.join(F.broadcast(dim), F.col("id") == F.col("k")).drop("k"),
         "union": scan.unionByName(ck),
         "coalesce": scan.coalesce(1),
+        "cache": cached.select("id", "text"),
     }
     trigger = 2 * sc.defaultParallelism
     decisions = set()
@@ -284,3 +290,33 @@ def test_spread_for_cpu_probe_runs_no_job(spark, tmp_path):
         assert (spread is not df) == spreads, name
         decisions.add(spreads)
     assert decisions == {True, False}  # both outcomes are covered
+    cached.unpersist()
+
+
+def test_sum_partials_direct_and_aggregate_agree(spark, monkeypatch):
+    """Both branches of scale.sum_partials return the same per-key
+    numpy sums for a scalar and an array column (keys absent from the
+    frame sum to zero), and an empty frame sums to zeros."""
+    import numpy as np
+
+    rows = [
+        (0, 1, [1.0, 2.0]),
+        (2, 3, [0.5, 0.25]),
+        (0, 4, [10.0, 20.0]),
+        (2, 5, [1.0, 1.0]),
+    ]
+    stats = spark.createDataFrame(rows, "k int, n long, v array<double>").repartition(2)
+    empty = stats.filter("k < 0")
+    want_n = np.array([5.0, 0.0, 8.0, 0.0])
+    want_v = np.array([[11.0, 22.0], [0.0, 0.0], [1.5, 1.25], [0.0, 0.0]])
+    for cap in (10**9, 0):  # direct collect, then keyed aggregate
+        monkeypatch.setitem(scale.DRIVER_LOCAL_MAX, "kmeans", cap)
+        got = scale.sum_partials(stats, "k", ["n", "v"], 4, "kmeans")
+        assert np.array_equal(got["n"], want_n), cap
+        assert np.array_equal(got["v"], want_v), cap
+        scalar_only = scale.sum_partials(stats, "k", ["n"], 4, "kmeans")
+        assert list(scalar_only) == ["n"]
+        assert np.array_equal(scalar_only["n"], want_n), cap
+        none = scale.sum_partials(empty, "k", ["n", "v"], 4, "kmeans")
+        assert np.array_equal(none["n"], np.zeros(4)), cap
+        assert none["v"].shape == (4, 0), cap

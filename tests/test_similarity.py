@@ -5,7 +5,7 @@ import math
 from pyspark.sql import functions as F
 
 from climate_data_pipelines_spark.catalog import load_table
-from climate_data_pipelines_spark.operators import similarity
+from climate_data_pipelines_spark.operators import scale, similarity
 
 
 def _vecs(spark, rows):
@@ -411,6 +411,35 @@ def test_kmeans_clusters_matches_numpy_reference(spark):
     assert all(inertia[i] <= inertia[i - 1] * (1 + 1e-9) for i in range(1, 5))
     # cluster LABELS are init-order on both sides, so they match 1:1
     assert got == {i: int(ref[i]) for i in range(len(X))}
+
+
+def test_kmeans_aggregate_partials_match_direct(spark, monkeypatch):
+    """Both partial-sum branches of scale.sum_partials drive the same
+    Lloyd trajectory: the direct collect (default budget) and the
+    (cluster, dim) aggregate (a zero "kmeans" budget) give equal
+    assignments and inertia within 1e-9 relative."""
+    import numpy as np
+
+    rng = np.random.default_rng(11)
+    centers = np.array([[4.0, 0.0], [0.0, 4.0], [-4.0, -4.0]])
+    pts = np.concatenate(
+        [centers[i] + 0.5 * rng.standard_normal((30, 2)) for i in range(3)]
+    )
+    df = _vecs(
+        spark, [(int(i), [float(x) for x in p], 0) for i, p in enumerate(pts)]
+    ).repartition(3)
+
+    def fit():
+        assigned, inertia = similarity.kmeans_clusters(df, k=3, iters=4)
+        return {r["vec_id"]: r["cluster"] for r in assigned.collect()}, inertia
+
+    direct, direct_inertia = fit()
+    monkeypatch.setitem(scale.DRIVER_LOCAL_MAX, "kmeans", 0)
+    agg, agg_inertia = fit()
+    assert agg == direct
+    assert len(direct) == len(pts)
+    for a, d in zip(agg_inertia, direct_inertia):
+        assert math.isclose(a, d, rel_tol=1e-9), (a, d)
 
 
 def test_kmeans_skips_null_and_ragged_vectors(spark):

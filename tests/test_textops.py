@@ -493,15 +493,16 @@ def test_bpe_train_batched_matches_reference(spark, sf_dir):
     assert len(got) == 18
 
 
-def test_bpe_train_local_matches_distributed(spark, sf_dir):
-    """The driver-local merge loop (vocab under SPARK_GRAFT_BPE_LOCAL_MAX,
-    the default on every test fixture) must be bit-identical to the
-    forced-distributed loop (local_max=0) — both the classic m=1 and
-    the batched shape, including symbols that are SQL-literal-hostile
+def test_bpe_train_local_matches_distributed(spark, sf_dir, monkeypatch):
+    """The driver-local merge loop (vocab under
+    ``scale.DRIVER_LOCAL_MAX["bpe"]``, the default on every test
+    fixture) must be bit-identical to the forced-distributed loop (a
+    zero "bpe" budget) — both the classic m=1 and the batched shape,
+    including symbols that are SQL-literal-hostile
     (quotes, backslashes) and non-BMP code points (Spark's split-to-
     chars and Python's list() must agree on surrogate-pair grouping)."""
     from climate_data_pipelines_spark.catalog import load_table
-    from climate_data_pipelines_spark.operators import textops
+    from climate_data_pipelines_spark.operators import scale, textops
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
@@ -520,12 +521,14 @@ def test_bpe_train_local_matches_distributed(spark, sf_dir):
             (r["merge_idx"], r["left"], r["right"], r["pair_count"])
             for r in textops.bpe_train(docs, n_merges=m, batch_m=batch).collect()
         ]
-        dist = [
-            (r["merge_idx"], r["left"], r["right"], r["pair_count"])
-            for r in textops.bpe_train(
-                docs, n_merges=m, batch_m=batch, local_max=0
-            ).collect()
-        ]
+        with monkeypatch.context() as mp:
+            mp.setitem(scale.DRIVER_LOCAL_MAX, "bpe", 0)
+            dist = [
+                (r["merge_idx"], r["left"], r["right"], r["pair_count"])
+                for r in textops.bpe_train(
+                    docs, n_merges=m, batch_m=batch
+                ).collect()
+            ]
         assert local == dist
         assert len(local) == m
 
