@@ -336,11 +336,14 @@ def minhash_lsh_candidates_cross(
     Both signature frames use the same hash family (per-doc
     signatures are frame-independent), so the (band, band_hash)
     equi-join across the two bucket tables yields exactly the
-    cross-corpus subset of the full self-join candidate set. At
-    100 TB the base side's buckets are computed ONCE and persisted
-    (bucketed by band_hash); each incremental batch hashes only its
-    own docs and joins — no O(base²) work and no base reshuffle on
-    re-crawl. Returns distinct (id_a = new id, id_b = base id).
+    cross-corpus subset of the full self-join candidate set: no
+    O(base²) work, and each incremental batch MinHashes only its own
+    docs. The base side's signatures are persisted
+    (``curate_increment`` reads them from the dedup index), but its
+    band buckets are NOT: every call re-bands the whole base
+    signature table and shuffles it to the join, so a call costs
+    O(base) in reads and shuffle. Returns distinct (id_a = new id,
+    id_b = base id).
     """
     a = _band_buckets(sigs_new, id_col, n_hashes, bands, allow_correlated_bands).alias("a")
     b = _band_buckets(sigs_base, id_col, n_hashes, bands, allow_correlated_bands).alias("b")

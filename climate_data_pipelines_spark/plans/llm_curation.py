@@ -765,9 +765,10 @@ def curate_corpus(
     # persist the dedup index of what actually landed (read back from
     # the shards, same verification stance as the manifest) so day-N
     # increments never re-hash the base corpus
+    landed = spark.read.schema(out.schema).parquet(f"{out_dir}/shards")
     index_cols = ["doc_id", "text"] + ([url_col] if url_col else [])
     _write_dedup_index(
-        spark.read.parquet(f"{out_dir}/shards").select(*index_cols),
+        landed.select(*index_cols),
         out_dir,
         url_col=url_col,
         containment=containment,
@@ -782,7 +783,7 @@ def curate_corpus(
         manifest["packing"] = _write_packing(
             spark,
             out_dir,
-            spark.read.parquet(f"{out_dir}/shards").select("doc_id", "text"),
+            landed.select("doc_id", "text"),
             int(pack_ctx_len),
         )
         _rewrite_manifest(out_dir, manifest)
@@ -804,6 +805,21 @@ def curate_corpus(
     return manifest
 
 
+def _raise_on_id_clash(batch: DataFrame, base: DataFrame) -> None:
+    """Raise ``ValueError`` when a ``doc_id`` of ``batch`` is already in
+    ``base``. A crawl that restarts its id sequence per day would put
+    two different texts under one id in the cross-corpus verify
+    (inflating per-pair shingle counts) and collide appended shard rows
+    with base rows. One semi-join on 8-byte keys."""
+    clash = batch.select("doc_id").join(base.select("doc_id"), "doc_id", "left_semi")
+    if not clash.isEmpty():
+        raise ValueError(
+            "curate_increment requires globally unique doc_ids: the new "
+            "batch reuses ids already present in the base corpus "
+            "(namespace the increment ids, e.g. day_offset + doc_id)"
+        )
+
+
 def curate_increment(
     spark: SparkSession,
     new_docs: DataFrame,
@@ -820,8 +836,24 @@ def curate_increment(
 
     PRECONDITION: ``doc_id`` is globally unique across the base corpus
     and every increment batch (namespace daily ids if the crawler
-    restarts its sequence). Enforced by a cheap semi-join check that
-    raises ``ValueError`` on any clash.
+    restarts its sequence). A clash raises ``ValueError`` before any
+    write. The manifest records the base's ``min_doc_id`` and
+    ``max_doc_id``; the batch's range rides the exact-dedup
+    checkpoint, and only when the two overlap do the deduplicated
+    batch ids pay a semi-join against the base ids. Without a trusted
+    range (an older manifest, or one that is not current), or when
+    the index must first be rebuilt (a write), every batch id is
+    semi-joined up front instead.
+
+    The base's layout, schema and counts come from what is on disk,
+    not from Spark jobs: the last shard from the shard-directory
+    listing, the base schema from a shard footer, the index staleness
+    probe from the digest table's footer row counts against the
+    manifest's ``total_docs``. The manifest counts only while its shard list
+    equals the shard directories on disk (``sinks.manifest_is_current``);
+    a crash between a shard append and the manifest rewrite breaks
+    that, and the increment then rebuilds the index and the sink
+    re-derives the manifest from a full read-back.
 
     Stages on the new batch only:
       1. quality gate + exact dedup WITHIN the batch;
@@ -838,8 +870,11 @@ def curate_increment(
          candidate pairs), dropping the NEW member of each pair;
       5. optional benchmark decontamination (pass the eval frame);
       6. shard assignment continuing the numbering AFTER the base's
-         last shard; parquet append + a fresh read-back manifest that
-         covers base + increment together.
+         last shard; parquet append, then a manifest covering base +
+         increment: the base manifest's rows merged with a read-back
+         of only the appended shards (``sinks.write_training_shards``);
+      7. the dedup index append, from the survivors checkpoint,
+         digests last.
 
     r9: the base manifest's ``stages`` record drives two further
     stages automatically — the increment applies the SAME recipe the
@@ -879,22 +914,34 @@ def curate_increment(
     full repack instead (self-healing, never silently wrong).
     Returns the combined manifest.
     """
+    import json as _json
+
     import pyspark.sql.functions as F
+    from pyspark.sql import Observation
 
     from climate_data_pipelines_spark.operators.scale import unpersist_checkpoint
 
-    base = spark.read.parquet(f"{base_dir}/shards")
-    base_max_shard = (
-        base.agg(F.coalesce(F.max("shard"), F.lit(-1)).alias("m")).collect()[0]["m"]
-    )
-
-    # the base manifest is read FIRST: it carries both the shard cap
-    # and (r9) the stage recipe the base was curated with — the
-    # increment applies the same stages, from the artifact
-    import json as _json
-
+    # the base manifest is read FIRST: it carries the shard cap, (r9)
+    # the stage recipe the base was curated with — the increment
+    # applies the same stages, from the artifact — and the base's
+    # counts and doc-id range. Those facts hold only while the
+    # manifest is current (its shard list equals the shard directories
+    # on disk); a crash between a shard append and the manifest
+    # rewrite leaves unlisted shards, and the index is rebuilt below.
     with open(f"{base_dir}/manifest.json") as fh:
         base_manifest = _json.load(fh)
+    current = sinks.manifest_is_current(base_dir, base_manifest)
+    base_max_shard = max(sinks.shard_ids_on_disk(base_dir), default=-1)
+    # read with the schema a shard footer records: a file listing,
+    # where schema inference would be a job
+    base = spark.read.schema(sinks.parquet_schema(f"{base_dir}/shards")).parquet(
+        f"{base_dir}/shards"
+    )
+    base_range = (
+        (base_manifest["min_doc_id"], base_manifest["max_doc_id"])
+        if current and "min_doc_id" in base_manifest
+        else None
+    )
     stages = base_manifest.get("stages") or {}
     url_conf = stages.get("url_dedup")
     cont_conf = stages.get("containment")
@@ -904,49 +951,38 @@ def curate_increment(
     pack_conf = stages.get("packing")
     base_max_doc_id = None
     if pack_conf:
+        # the packing continuation is only valid when every batch id
+        # sorts after every base id — the global token stream is
+        # doc_id-ordered. A manifest without the range pays one scan,
         # evaluated BEFORE the shard append below (the lazy `base`
-        # frame re-lists files at execution time): the packing
-        # continuation is only valid when every batch id sorts after
-        # every base id — the global token stream is doc_id-ordered
-        base_max_doc_id = base.agg(
+        # frame re-lists files at execution time)
+        base_max_doc_id = base_range[1] if base_range else base.agg(
             F.coalesce(F.max("doc_id"), F.lit(-(1 << 62))).alias("m")
         ).collect()[0]["m"]
-
-    # PRECONDITION: doc_ids are globally unique across the batch and
-    # the base corpus. A crawl that restarts its id sequence per day
-    # would put two different texts under one id in the cross-corpus
-    # verify (inflating per-pair shingle counts) and collide appended
-    # shard rows with base rows — enforce cheaply before any dedup
-    # math (32-byte keys both sides, one small semi-join).
-    clash = new_docs.select("doc_id").join(
-        base.select("doc_id"), "doc_id", "left_semi"
-    )
-    if not clash.isEmpty():
-        raise ValueError(
-            "curate_increment requires globally unique doc_ids: the new "
-            "batch reuses ids already present in the base corpus "
-            "(namespace the increment ids, e.g. day_offset + doc_id)"
-        )
 
     # the base's dedup state comes from the PERSISTED index written at
     # curate_corpus time (digests + MinHash signatures of the kept
     # corpus) — the increment never re-hashes base text, so its
     # data-dependent cost is O(batch), not O(total). A missing or
     # stale index (pre-index base dir, or a crash between the shard
-    # append and the index append) is detected by row count against
-    # the shards and rebuilt — self-healing, never silently wrong.
-    from pyspark.errors import AnalysisException
-
-    base_digests_df = None
-    sb = None
-    try:
-        dig = spark.read.parquet(f"{base_dir}/dedup_index/digests")
-        if dig.count() == base.count():
-            base_digests_df = dig
-            sb = spark.read.parquet(f"{base_dir}/dedup_index/signatures")
-    except AnalysisException:
-        pass
-    if sb is None:
+    # append and the index append) is detected by the digest row count
+    # — summed from the parquet footers — against the manifest's
+    # ``total_docs``, and rebuilt; so is any index next to a manifest
+    # that is not current — self-healing, never silently wrong.
+    index_dir = f"{base_dir}/dedup_index"
+    rebuild = (
+        not current
+        or sinks.parquet_rows(f"{index_dir}/digests") != base_manifest["total_docs"]
+        or sinks.parquet_rows(f"{index_dir}/signatures") < 0
+    )
+    # PRECONDITION: doc_ids are globally unique across the batch and
+    # the base corpus (see the docstring). Without a trusted base id
+    # range, or before a rebuild (a write), the whole batch is checked
+    # here; otherwise after exact dedup, against the recorded range.
+    clash_checked = rebuild or base_range is None
+    if clash_checked:
+        _raise_on_id_clash(new_docs, base)
+    if rebuild:
         rebuild_cols = ["doc_id", "text"] + (
             [url_conf["url_col"]] if url_conf else []
         )
@@ -957,8 +993,9 @@ def curate_increment(
             containment=bool(cont_conf),
             domain_url_col=dg_conf["url_col"] if dg_conf else None,
         )
-        base_digests_df = spark.read.parquet(f"{base_dir}/dedup_index/digests")
-        sb = spark.read.parquet(f"{base_dir}/dedup_index/signatures")
+    base_digests_df = spark.read.schema("doc_id BIGINT, digest STRING").parquet(
+        f"{index_dir}/digests"
+    )
 
     if url_conf:
         # STAGE 0 (manifest-driven): keep-best per canonical URL
@@ -1019,7 +1056,17 @@ def curate_increment(
     passed = new_docs.filter(textops.quality_predicate("text"))
     if gopher_conf:
         passed = passed.filter(textops.gopher_keep("text"))
-    unique = dedup.exact_dedup(passed).localCheckpoint(eager=True)
+    batch_ids = Observation("batch_ids")
+    unique = (
+        dedup.exact_dedup(passed)
+        .observe(batch_ids, F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi"))
+        .localCheckpoint(eager=True)
+    )
+    if not clash_checked:
+        lo, hi = batch_ids.get["lo"], batch_ids.get["hi"]
+        # the semi-join runs only when the id ranges overlap
+        if lo is not None and lo <= base_range[1] and hi >= base_range[0]:
+            _raise_on_id_clash(unique, base)
     # exact dedup vs base: digest anti-join (32-byte keys both sides).
     # The digest MUST be the same key exact_dedup groups on — sha256 of
     # the NORMALIZED text (dedup.py:37) — or a case/whitespace variant
@@ -1028,7 +1075,7 @@ def curate_increment(
     from climate_data_pipelines_spark.functions.text import normalize_text
 
     digest = F.sha2(normalize_text(F.col("text")), 256)
-    base_digests = base_digests_df.select(F.col("digest").alias("_d")).distinct()
+    base_digests = base_digests_df.select(F.col("digest").alias("_d"))
     fresh = unique.withColumn("_d", digest).join(
         base_digests, "_d", "left_anti"
     ).drop("_d")
@@ -1040,6 +1087,7 @@ def curate_increment(
     ).localCheckpoint(eager=True)
     batch_clean = neardup_dedup(fresh, sigs, jaccard_threshold)
 
+    sb = spark.read.schema(sigs.schema).parquet(f"{index_dir}/signatures")
     sn = sigs.join(batch_clean.select("doc_id"), "doc_id", "left_semi")
     cand = dedup.minhash_lsh_candidates_cross(
         sn, sb, n_hashes=MINHASH_N, bands=MINHASH_BANDS
@@ -1125,7 +1173,7 @@ def curate_increment(
         # re-mixed, so their keep rate is definitionally 1
         .withColumn("keep_rate", F.lit(1.0))
     )
-    out = out.select(*spark.read.parquet(f"{base_dir}/shards").columns)
+    out = out.select(*base.columns)
     # re-record the configured cap AND the stage recipe so day-N+1
     # reads the same values (the append rewrites manifest.json)
     manifest = sinks.write_training_shards(
@@ -1134,10 +1182,13 @@ def curate_increment(
     )
     # keep the dedup index in lockstep with the shards so day-N+1
     # joins against today's appends too; a crash before this append
-    # leaves a stale index the next increment detects and rebuilds
+    # leaves a stale index the next increment detects and rebuilds.
+    # The rows come from the survivors checkpoint, not `out`: the same
+    # ids (the shard join drops only null ids), without re-running
+    # the shard-assignment plan
     index_cols = ["doc_id", "text"] + ([url_conf["url_col"]] if url_conf else [])
     _write_dedup_index(
-        out.select(*index_cols),
+        survivors.filter(F.col("doc_id").isNotNull()).select(*index_cols),
         base_dir,
         mode="append",
         url_col=url_conf["url_col"] if url_conf else None,

@@ -466,6 +466,68 @@ def write_jsonl(
     w.json(path)
 
 
+def data_files(path: str) -> list[str]:
+    """The data files a Spark read of ``path`` would see, sorted: every
+    file under it except those whose name, or the name of a directory
+    on the way, starts with ``_`` or ``.`` (``_SUCCESS``, checksums,
+    a crashed write's ``_temporary``). A driver-side listing; no job.
+    Empty when ``path`` does not exist."""
+    import os
+
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        out += [os.path.join(root, f) for f in files if not f.startswith(("_", "."))]
+    return sorted(out)
+
+
+def parquet_rows(path: str) -> int:
+    """Row count of the parquet table at ``path``, summed from its file
+    footers on the driver (no job); -1 when no data file exists."""
+    import pyarrow.parquet as pq
+
+    files = data_files(path)
+    return sum(pq.read_metadata(f).num_rows for f in files) if files else -1
+
+
+def parquet_schema(path: str):
+    """The data schema Spark recorded in the footer of the first data
+    file of the Spark-written table at ``path`` — what schema inference
+    would read, without its job. Partition columns are not in it: a
+    read with this schema still takes them from the directory names."""
+    import json
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    meta = pq.read_metadata(data_files(path)[0]).metadata
+    return StructType.fromJson(
+        json.loads(meta[b"org.apache.spark.sql.parquet.row.metadata"])
+    )
+
+
+def shard_ids_on_disk(out_dir: str) -> list[int]:
+    """The sorted ids of the ``shard=N`` directories under
+    ``out_dir/shards`` (a driver-side listing; no job)."""
+    import glob
+    import os
+
+    return sorted(
+        int(os.path.basename(d).split("=", 1)[1])
+        for d in glob.glob(os.path.join(out_dir, "shards", "shard=*"))
+    )
+
+
+def manifest_is_current(out_dir: str, manifest: dict) -> bool:
+    """True while ``manifest``'s shard list equals the shard directories
+    on disk. A crash between a shard append and the manifest rewrite
+    leaves directories the manifest does not list; its counts are then
+    not the corpus's."""
+    return shard_ids_on_disk(out_dir) == sorted(
+        s["shard"] for s in manifest["shards"]
+    )
+
+
 def write_training_shards(
     df: DataFrame,
     out_dir: str,
@@ -476,15 +538,26 @@ def write_training_shards(
     """Trainer-facing shard sink: parquet partitioned by ``shard``
     (one directory per shard — the unit a dataloader maps to one
     worker/epoch slice) plus a ``manifest.json`` recording per-shard
-    document and token counts and the totals. ``df`` must carry
-    ``shard`` and ``n_tok`` (``training.shard_assign`` output joined
-    back to the payload columns).
+    document and token counts, the totals and the smallest and largest
+    ``doc_id`` (``min_doc_id``, ``max_doc_id``). ``df`` must carry
+    ``doc_id``, ``shard`` and ``n_tok`` (``training.shard_assign``
+    output joined back to the payload columns).
 
     The manifest aggregate is |shards|-sized (never row-sized) and is
     the ONLY driver materialization. It is computed by READING BACK
-    the parquet just written — not by re-executing the input plan —
-    so it is a true verification record of what landed on disk (and
-    one pipeline evaluation instead of two; r6 second-review finding).
+    the parquet just written (with ``df``'s schema, so no inference
+    job) — not by re-executing the input plan — so it is a true
+    verification record of what landed on disk (and one pipeline
+    evaluation instead of two; r6 second-review finding).
+
+    ``mode="append"`` reads back only the shards this write added
+    files to (a partition-pruned read) and merges their rows with the
+    existing manifest's, provided that manifest is current (its shard
+    list equals the shard directories on disk, see
+    ``manifest_is_current``) and records the id range. Otherwise —
+    no manifest, a crash left unlisted shards, a manifest from before
+    the id range — the whole directory is read back, as an overwrite
+    does.
 
     ``tokens_per_shard`` is the CONFIGURED cap, recorded verbatim in
     the manifest so incremental appends can reuse it — inferring it
@@ -496,35 +569,56 @@ def write_training_shards(
     check lists the directory on the driver and runs no job.
     Returns the manifest dict.
     """
-    import glob
     import json
     import os
 
     from pyspark.sql import functions as F
 
-    df.write.partitionBy("shard").mode(mode).parquet(f"{out_dir}/shards")
-    if not glob.glob(os.path.join(out_dir, "shards", "shard=*")):
+    shards_dir = os.path.join(out_dir, "shards")
+    prior = None
+    if mode == "append" and os.path.exists(os.path.join(out_dir, "manifest.json")):
+        with open(os.path.join(out_dir, "manifest.json")) as fh:
+            prior = json.load(fh)
+        if not manifest_is_current(out_dir, prior) or "min_doc_id" not in prior:
+            prior = None
+    before = set(data_files(shards_dir)) if prior is not None else set()
+    df.write.partitionBy("shard").mode(mode).parquet(shards_dir)
+    if not shard_ids_on_disk(out_dir):
         raise ValueError(
             f"no documents survived to the shard sink: {out_dir}/shards "
             "is empty (every input document was dropped upstream)"
         )
-    spark = df.sparkSession
-    rows = (
-        spark.read.parquet(f"{out_dir}/shards")
-        .groupBy("shard")
-        .agg(F.count("*").alias("docs"), F.sum("n_tok").alias("tokens"))
-        .orderBy("shard")
-        .collect()
-    )
+    back = df.sparkSession.read.schema(df.schema).parquet(shards_dir)
+    rows, lo, hi = {}, [], []
+    if prior is not None:
+        rows = {s["shard"]: s for s in prior["shards"]}
+        lo, hi = [prior["min_doc_id"]], [prior["max_doc_id"]]
+        # shard=N/part-… → N for every file this write added: only those
+        # partitions are read back (an empty append reads nothing)
+        touched = sorted({
+            int(os.path.basename(os.path.dirname(f)).split("=", 1)[1])
+            for f in set(data_files(shards_dir)) - before
+        })
+        back = back.filter(F.col("shard").isin(touched)) if touched else None
+    if back is not None:
+        for r in back.groupBy("shard").agg(
+            F.count("*").alias("docs"), F.sum("n_tok").alias("tokens"),
+            F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi"),
+        ).collect():
+            rows[int(r["shard"])] = {
+                "shard": int(r["shard"]), "docs": int(r["docs"]),
+                "tokens": int(r["tokens"]),
+            }
+            lo.append(r["lo"])
+            hi.append(r["hi"])
+    shards = [rows[k] for k in sorted(rows)]
     manifest = {
-        "shards": [
-            {"shard": int(r["shard"]), "docs": int(r["docs"]),
-             "tokens": int(r["tokens"])}
-            for r in rows
-        ],
-        "n_shards": len(rows),
-        "total_docs": int(sum(r["docs"] for r in rows)),
-        "total_tokens": int(sum(r["tokens"] for r in rows)),
+        "shards": shards,
+        "n_shards": len(shards),
+        "total_docs": int(sum(s["docs"] for s in shards)),
+        "total_tokens": int(sum(s["tokens"] for s in shards)),
+        "min_doc_id": min(lo),
+        "max_doc_id": max(hi),
     }
     if tokens_per_shard is not None:
         manifest["tokens_per_shard"] = int(tokens_per_shard)

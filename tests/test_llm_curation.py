@@ -8,7 +8,10 @@ import json
 
 import pytest
 
-
+# Spark jobs of curate_corpus and curate_increment on the fixture's
+# even/odd halves (test_curate_job_counts_bounded), as measured
+CORPUS_JOBS_MAX = 45
+INCREMENT_JOBS_MAX = 53
 
 
 @pytest.fixture(scope="module")
@@ -961,3 +964,199 @@ def test_packing_stage_increment_continues_stream(
     assert not os.path.exists(f"{out}/packing")
     assert "packing" not in manifest3
     assert manifest3["stages"]["packing"] is None
+
+
+@pytest.fixture(scope="module")
+def even_base(spark, sf_dir, tmp_path_factory):
+    """A base curated from the fixture's even ids, and the number of
+    Spark jobs that curate_corpus run launched."""
+    import pyspark.sql.functions as F
+
+    from climate_data_pipelines_spark.catalog import load_table
+    from climate_data_pipelines_spark.plans.llm_curation import curate_corpus
+
+    src = str(tmp_path_factory.mktemp("even_src"))
+    load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 2 == 0).write.parquet(
+        f"{src}/documents.parquet"
+    )
+    out = str(tmp_path_factory.mktemp("even_base"))
+    jobs = _jobs_of(spark, "even-base", lambda: curate_corpus(spark, src, out, tokens_per_shard=300))
+    return out, jobs
+
+
+def _jobs_of(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(list(sc.statusTracker().getJobIdsForGroup(group)))
+
+
+def _copy_base(even_base, tmp_path):
+    import shutil
+
+    out = str(tmp_path / "base")
+    shutil.copytree(even_base[0], out)
+    return out
+
+
+def _odd_batch(spark, sf_dir, id_shift=0):
+    import pyspark.sql.functions as F
+
+    from climate_data_pipelines_spark.catalog import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    return docs.filter((F.col("doc_id") % 2 == 1) & (F.col("source") != "src0")).withColumn(
+        "doc_id", F.col("doc_id") + id_shift
+    )
+
+
+def _snapshot(out):
+    """Every file under ``out`` with its size and modification time."""
+    import os
+
+    return {
+        os.path.join(r, f): (os.path.getsize(os.path.join(r, f)), os.path.getmtime(os.path.join(r, f)))
+        for r, _, fs in os.walk(out)
+        for f in fs
+    }
+
+
+def _manifest_from_read_back(spark, out):
+    import pyspark.sql.functions as F
+
+    back = spark.read.parquet(f"{out}/shards")
+    rows = back.groupBy("shard").agg(F.count("*").alias("d"), F.sum("n_tok").alias("t")).collect()
+    shards = sorted((int(r["shard"]), int(r["d"]), int(r["t"])) for r in rows)
+    lo, hi = back.agg(F.min("doc_id"), F.max("doc_id")).first()
+    return shards, lo, hi
+
+
+def _manifest_rows(manifest):
+    return (
+        [(s["shard"], s["docs"], s["tokens"]) for s in manifest["shards"]],
+        manifest["min_doc_id"],
+        manifest["max_doc_id"],
+    )
+
+
+def test_curate_job_counts_bounded(spark, sf_dir, even_base, tmp_path):
+    """Job-count regression: a full run and an increment launch Spark
+    jobs only for their own work, not to re-learn what the base
+    records (49 and 78 here while the increment re-read them)."""
+    from climate_data_pipelines_spark.plans.llm_curation import curate_increment
+
+    out = _copy_base(even_base, tmp_path)
+    batch = _odd_batch(spark, sf_dir)
+    inc_jobs = _jobs_of(spark, "increment", lambda: curate_increment(spark, batch, out))
+    assert even_base[1] <= CORPUS_JOBS_MAX
+    assert inc_jobs <= INCREMENT_JOBS_MAX
+
+
+def test_increment_id_clash_raises_before_any_write(spark, sf_dir, even_base, tmp_path):
+    """A batch that reuses base ids raises ValueError and leaves the
+    shards, the manifest and the dedup index as they were."""
+    from climate_data_pipelines_spark.plans.llm_curation import curate_increment
+
+    out = _copy_base(even_base, tmp_path)
+    before = _snapshot(out)
+    with open(f"{out}/manifest.json") as fh:
+        manifest = fh.read()
+    # odd ids shifted down by one are the even ids the base kept
+    with pytest.raises(ValueError, match="globally unique doc_ids"):
+        curate_increment(spark, _odd_batch(spark, sf_dir, id_shift=-1), out)
+    assert _snapshot(out) == before
+    with open(f"{out}/manifest.json") as fh:
+        assert fh.read() == manifest
+
+
+def test_increment_overlapping_id_ranges_with_distinct_ids_pass(
+    spark, sf_dir, even_base, tmp_path
+):
+    """Odd batch ids interleave with the even base ids: the ranges
+    overlap, the semi-join finds no clash, and the manifest's id range
+    and rows equal a read-back of the combined shards."""
+    from climate_data_pipelines_spark.plans.llm_curation import curate_increment
+
+    out = _copy_base(even_base, tmp_path)
+    with open(f"{out}/manifest.json") as fh:
+        base = json.load(fh)
+    manifest = curate_increment(spark, _odd_batch(spark, sf_dir), out)
+    assert base["min_doc_id"] < manifest["max_doc_id"]
+    assert manifest["total_docs"] > base["total_docs"]
+    assert _manifest_rows(manifest) == _manifest_from_read_back(spark, out)
+
+
+def test_increment_without_manifest_id_range_falls_back_to_semi_join(
+    spark, sf_dir, even_base, tmp_path
+):
+    """A manifest written before the id range was recorded: a clashing
+    batch still raises (the up-front semi-join), a clean one passes and
+    the manifest gains the range from a full read-back."""
+    from climate_data_pipelines_spark.plans.llm_curation import curate_increment
+
+    out = _copy_base(even_base, tmp_path)
+    with open(f"{out}/manifest.json") as fh:
+        old = json.load(fh)
+    del old["min_doc_id"], old["max_doc_id"]
+    with open(f"{out}/manifest.json", "w") as fh:
+        json.dump(old, fh)
+    before = _snapshot(out)
+    with pytest.raises(ValueError, match="globally unique doc_ids"):
+        curate_increment(spark, _odd_batch(spark, sf_dir, id_shift=-1), out)
+    assert _snapshot(out) == before
+    manifest = curate_increment(spark, _odd_batch(spark, sf_dir), out)
+    assert _manifest_rows(manifest) == _manifest_from_read_back(spark, out)
+
+
+def test_increment_self_heals_after_manifest_crash(spark, sf_dir, even_base, tmp_path):
+    """A crash between the shard append and the manifest rewrite leaves
+    shard directories the manifest does not list. The next increment
+    must not trust the manifest's counts: it rebuilds the dedup index
+    (overwriting its files) and re-derives the manifest from a full
+    read-back."""
+    import os
+
+    import pyspark.sql.functions as F
+
+    from climate_data_pipelines_spark.catalog import load_table
+    from climate_data_pipelines_spark.functions.text import normalize_text
+    from climate_data_pipelines_spark.operators import dedup
+    from climate_data_pipelines_spark.plans.llm_curation import curate_increment
+    from climate_data_pipelines_spark.queries import MINHASH_N
+
+    out = _copy_base(even_base, tmp_path)
+    with open(f"{out}/manifest.json") as fh:
+        pre_append = fh.read()
+    curate_increment(spark, _odd_batch(spark, sf_dir), out)
+    with open(f"{out}/manifest.json", "w") as fh:
+        fh.write(pre_append)
+    def digest_files():
+        return {f for f in os.listdir(f"{out}/dedup_index/digests") if f.startswith("part-")}
+
+    before = digest_files()
+
+    docs = load_table(spark, sf_dir, "documents")
+    fresh = docs.filter(F.col("source") == "src1").select(
+        (F.col("doc_id") + F.lit(1_000_000)).alias("doc_id"),
+        F.reverse(F.col("text")).alias("text"),
+        *[c for c in docs.columns if c not in ("doc_id", "text")],
+    )
+    manifest = curate_increment(spark, fresh, out)
+    # rebuilt: the digest table was overwritten, not appended to
+    assert not before & digest_files()
+    assert _manifest_rows(manifest) == _manifest_from_read_back(spark, out)
+    with open(f"{out}/manifest.json") as fh:
+        assert json.load(fh) == manifest
+
+    shards = spark.read.parquet(f"{out}/shards")
+    dig = spark.read.parquet(f"{out}/dedup_index/digests")
+    sig = spark.read.parquet(f"{out}/dedup_index/signatures")
+    want = shards.select(
+        "doc_id", F.sha2(normalize_text(F.col("text")), 256).alias("digest")
+    )
+    assert dig.exceptAll(want).isEmpty() and want.exceptAll(dig).isEmpty()
+    want_sig = dedup.minhash_signatures(shards.select("doc_id", "text"), k=3, n_hashes=MINHASH_N)
+    assert sig.exceptAll(want_sig).isEmpty() and want_sig.exceptAll(sig).isEmpty()
