@@ -820,6 +820,20 @@ def _raise_on_id_clash(batch: DataFrame, base: DataFrame) -> None:
         )
 
 
+def _observed_range(ids) -> tuple | None:
+    """``(lo, hi)`` of the ``Observation`` ``ids``, ``(None, None)`` for
+    an empty frame; ``None`` when Spark dropped the metrics, as adaptive
+    execution does when a shuffle ABOVE the observed node comes out
+    empty and the rest of the plan is replaced by an empty relation."""
+    from py4j.protocol import Py4JJavaError
+
+    try:
+        got = ids.get
+    except Py4JJavaError:
+        return None
+    return got["lo"], got["hi"]
+
+
 def curate_increment(
     spark: SparkSession,
     new_docs: DataFrame,
@@ -836,21 +850,22 @@ def curate_increment(
 
     PRECONDITION: ``doc_id`` is globally unique across the base corpus
     and every increment batch (namespace daily ids if the crawler
-    restarts its sequence). A clash raises ``ValueError`` before any
-    write. The manifest records the base's ``min_doc_id`` and
-    ``max_doc_id``; the batch's range rides the exact-dedup
-    checkpoint, and only when the two overlap do the deduplicated
-    batch ids pay a semi-join against the base ids. Without a trusted
-    range (an older manifest, or one that is not current), or when
-    the index must first be rebuilt (a write), every batch id is
-    semi-joined up front instead.
+    restarts its sequence). Every id of ``new_docs`` is checked, also
+    those of documents the stages below drop, and a clash raises
+    ``ValueError`` before any write. The manifest records the base's
+    ``min_doc_id`` and ``max_doc_id``; the batch's range is observed
+    on ``new_docs`` as the first batch checkpoint runs, and only when
+    the two ranges overlap do the batch ids pay a semi-join against
+    the base ids. Without a trusted range (an older manifest, or one
+    that is not current), or when the index must first be rebuilt (a
+    write), the batch ids are semi-joined up front instead.
 
     The base's layout, schema and counts come from what is on disk,
     not from Spark jobs: the last shard from the shard-directory
     listing, the base schema from a shard footer, the index staleness
     probe from the digest table's footer row counts against the
     manifest's ``total_docs``. The manifest counts only while its shard list
-    equals the shard directories on disk (``sinks.manifest_is_current``);
+    equals the shard directories on disk (``sinks.trusted_manifest``);
     a crash between a shard append and the manifest rewrite breaks
     that, and the increment then rebuilds the index and the sink
     re-derives the manifest from a full read-back.
@@ -928,9 +943,11 @@ def curate_increment(
     # manifest is current (its shard list equals the shard directories
     # on disk); a crash between a shard append and the manifest
     # rewrite leaves unlisted shards, and the index is rebuilt below.
-    with open(f"{base_dir}/manifest.json") as fh:
-        base_manifest = _json.load(fh)
-    current = sinks.manifest_is_current(base_dir, base_manifest)
+    base_manifest = sinks.trusted_manifest(base_dir)
+    current = base_manifest is not None
+    if not current:
+        with open(f"{base_dir}/manifest.json") as fh:
+            base_manifest = _json.load(fh)
     base_max_shard = max(sinks.shard_ids_on_disk(base_dir), default=-1)
     # read with the schema a shard footer records: a file listing,
     # where schema inference would be a job
@@ -977,11 +994,18 @@ def curate_increment(
     )
     # PRECONDITION: doc_ids are globally unique across the batch and
     # the base corpus (see the docstring). Without a trusted base id
-    # range, or before a rebuild (a write), the whole batch is checked
-    # here; otherwise after exact dedup, against the recorded range.
-    clash_checked = rebuild or base_range is None
-    if clash_checked:
-        _raise_on_id_clash(new_docs, base)
+    # range, or before a rebuild (a write), the batch is checked here;
+    # otherwise its range is observed on the raw batch and checked
+    # after the first batch checkpoint, against the recorded range.
+    batch = new_docs
+    batch_ids = None
+    if rebuild or base_range is None:
+        _raise_on_id_clash(batch, base)
+    else:
+        batch_ids = Observation("batch_ids")
+        new_docs = new_docs.observe(
+            batch_ids, F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
+        )
     if rebuild:
         rebuild_cols = ["doc_id", "text"] + (
             [url_conf["url_col"]] if url_conf else []
@@ -1056,17 +1080,16 @@ def curate_increment(
     passed = new_docs.filter(textops.quality_predicate("text"))
     if gopher_conf:
         passed = passed.filter(textops.gopher_keep("text"))
-    batch_ids = Observation("batch_ids")
-    unique = (
-        dedup.exact_dedup(passed)
-        .observe(batch_ids, F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi"))
-        .localCheckpoint(eager=True)
-    )
-    if not clash_checked:
-        lo, hi = batch_ids.get["lo"], batch_ids.get["hi"]
-        # the semi-join runs only when the id ranges overlap
-        if lo is not None and lo <= base_range[1] and hi >= base_range[0]:
-            _raise_on_id_clash(unique, base)
+    unique = dedup.exact_dedup(passed).localCheckpoint(eager=True)
+    if batch_ids is not None:
+        # every checkpoint above executed the observed raw batch; the
+        # semi-join runs only when the id ranges overlap, or when Spark
+        # dropped the metrics (see _observed_range)
+        ids = _observed_range(batch_ids)
+        if ids is None or (
+            ids[0] is not None and ids[0] <= base_range[1] and ids[1] >= base_range[0]
+        ):
+            _raise_on_id_clash(batch, base)
     # exact dedup vs base: digest anti-join (32-byte keys both sides).
     # The digest MUST be the same key exact_dedup groups on — sha256 of
     # the NORMALIZED text (dedup.py:37) — or a case/whitespace variant

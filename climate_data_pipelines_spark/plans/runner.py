@@ -73,31 +73,20 @@ def run(args, spark=None) -> dict[str, int]:
         end=(args.end_year, args.end_month),
     )
 
-    # per-month cardinality report (the reference's monthly progress
-    # logging, precipitation_pipeline.py:167): one count_if per month
-    # of the argument window, riding the first sink's write as
-    # Observation metrics — never a read-back or a re-scan of `obs`
     from pyspark.sql import Observation
 
-    window = _months((args.start_year, args.start_month), (args.end_year, args.end_month))
-    month_counts = [
-        F.count_if((F.col("year") == y) & (F.col("month") == m)).alias(f"{y}-{m:02d}")
-        for y, m in window
-    ]
-    months = None
-
     written = {}
+    months = None
     if not args.skip_parquet:
         # P9 empty-input guard, lazily: Observation metrics ride the
         # write action (no second scan of the output), mirroring the
         # reference's `if df.empty: return False` checks
         # (humidity_pipeline.py:117-134) without an extra job.
-        guard = months = Observation("observations_guard")
+        guard = Observation("observations_guard")
         observed = obs.observe(
             guard,
             F.count(F.lit(1)).alias("n_rows"),
             F.count_if(F.col(args.value_col).isNull()).alias("n_null_values"),
-            *month_counts,
         )
         sinks.write_parquet_partitioned(
             observed, f"{args.output}/observations", ["year", "month"]
@@ -106,13 +95,10 @@ def run(args, spark=None) -> dict[str, int]:
         if metrics["n_rows"] == 0:
             print("WARNING: no observations in the selected range (empty input)")
         written["observations"] = metrics["n_rows"]
+        months = _partition_rows(f"{args.output}/observations")
 
     if not args.skip_geojson and args.lat_col and args.lon_col:
-        src = obs
-        if months is None:
-            months = Observation("month_counts")
-            src = obs.observe(months, *month_counts)
-        polys = climate.polygonize(src, lat_col=args.lat_col, lon_col=args.lon_col)
+        polys = climate.polygonize(obs, lat_col=args.lat_col, lon_col=args.lon_col)
         feats = climate.geojson_features(polys, value_col=args.value_col, props=["year", "month"])
         fc = climate.feature_collection(feats, ["year", "month"])
         # one FeatureCollection document (one text line) per row
@@ -122,21 +108,35 @@ def run(args, spark=None) -> dict[str, int]:
         )
         written["geojson_docs"] = docs.get["n"]
 
+    # per-month cardinality report (the reference's monthly progress
+    # logging, precipitation_pipeline.py:167): the row counts of the
+    # parquet sink's year=/month= partitions, summed from their footers
+    # on the driver. Without that sink the report is its own tiny
+    # aggregate, sorted on the driver.
     if months is None:
-        # no sink ran: the report is its own job
-        counts = obs.agg(*month_counts).first().asDict()
-    else:
-        counts = months.get
-    for y, m in window:
-        n = counts[f"{y}-{m:02d}"]
-        if n:
-            print(f"  {y}-{m:02d}: {n} observations")
+        months = {
+            (r.year, r.month): r.n
+            for r in obs.groupBy("year", "month").agg(F.count("*").alias("n")).collect()
+        }
+    for (y, m), n in sorted(months.items()):
+        print(f"  {y}-{m:02d}: {n} observations")
     return written
 
 
-def _months(start: tuple[int, int], end: tuple[int, int]) -> list[tuple[int, int]]:
-    """The (year, month) pairs from ``start`` to ``end``, inclusive."""
-    return [(i // 12, i % 12 + 1) for i in range(start[0] * 12 + start[1] - 1, end[0] * 12 + end[1])]
+def _partition_rows(path: str) -> dict[tuple[int, int], int]:
+    """``{(year, month): rows}`` of the parquet table at ``path``
+    partitioned by ``year``/``month``, from its file footers (no job)."""
+    import glob
+    import os
+
+    out = {}
+    for d in glob.glob(os.path.join(path, "year=*", "month=*")):
+        y = os.path.basename(os.path.dirname(d)).split("=", 1)[1]
+        m = os.path.basename(d).split("=", 1)[1]
+        n = sinks.parquet_rows(d)
+        if n > 0:
+            out[(int(y), int(m))] = n
+    return out
 
 
 def main() -> None:

@@ -518,14 +518,21 @@ def shard_ids_on_disk(out_dir: str) -> list[int]:
     )
 
 
-def manifest_is_current(out_dir: str, manifest: dict) -> bool:
-    """True while ``manifest``'s shard list equals the shard directories
-    on disk. A crash between a shard append and the manifest rewrite
-    leaves directories the manifest does not list; its counts are then
-    not the corpus's."""
-    return shard_ids_on_disk(out_dir) == sorted(
-        s["shard"] for s in manifest["shards"]
-    )
+def trusted_manifest(out_dir: str) -> dict | None:
+    """``out_dir/manifest.json`` while its counts are the corpus's: its
+    shard list equals the ``shard=N`` directories on disk. ``None``
+    when there is no manifest, or when a crash between a shard append
+    and the manifest rewrite left directories it does not list."""
+    import json
+    import os
+
+    path = os.path.join(out_dir, "manifest.json")
+    if not os.path.exists(path):
+        return None
+    with open(path) as fh:
+        manifest = json.load(fh)
+    listed = sorted(s["shard"] for s in manifest["shards"])
+    return manifest if listed == shard_ids_on_disk(out_dir) else None
 
 
 def write_training_shards(
@@ -550,14 +557,15 @@ def write_training_shards(
     verification record of what landed on disk (and one pipeline
     evaluation instead of two; r6 second-review finding).
 
-    ``mode="append"`` reads back only the shards this write added
-    files to (a partition-pruned read) and merges their rows with the
-    existing manifest's, provided that manifest is current (its shard
-    list equals the shard directories on disk, see
-    ``manifest_is_current``) and records the id range. Otherwise —
-    no manifest, a crash left unlisted shards, a manifest from before
-    the id range — the whole directory is read back, as an overwrite
-    does.
+    ``mode="append"`` with a trusted manifest that records the id
+    range (``trusted_manifest``) reads back only the shards numbered
+    after the manifest's last one (a partition-pruned read; none when
+    the append wrote nothing) and merges their rows with the
+    manifest's. The appended rows must therefore all carry shard
+    numbers past the manifest's last shard, as an increment's do.
+    Otherwise — no manifest, a crash left unlisted shards, a manifest
+    from before the id range — the whole directory is read back, as
+    an overwrite does.
 
     ``tokens_per_shard`` is the CONFIGURED cap, recorded verbatim in
     the manifest so incremental appends can reuse it — inferring it
@@ -575,15 +583,12 @@ def write_training_shards(
     from pyspark.sql import functions as F
 
     shards_dir = os.path.join(out_dir, "shards")
-    prior = None
-    if mode == "append" and os.path.exists(os.path.join(out_dir, "manifest.json")):
-        with open(os.path.join(out_dir, "manifest.json")) as fh:
-            prior = json.load(fh)
-        if not manifest_is_current(out_dir, prior) or "min_doc_id" not in prior:
-            prior = None
-    before = set(data_files(shards_dir)) if prior is not None else set()
+    prior = trusted_manifest(out_dir) if mode == "append" else None
+    if prior is not None and "min_doc_id" not in prior:
+        prior = None
     df.write.partitionBy("shard").mode(mode).parquet(shards_dir)
-    if not shard_ids_on_disk(out_dir):
+    on_disk = shard_ids_on_disk(out_dir)
+    if not on_disk:
         raise ValueError(
             f"no documents survived to the shard sink: {out_dir}/shards "
             "is empty (every input document was dropped upstream)"
@@ -593,13 +598,9 @@ def write_training_shards(
     if prior is not None:
         rows = {s["shard"]: s for s in prior["shards"]}
         lo, hi = [prior["min_doc_id"]], [prior["max_doc_id"]]
-        # shard=N/part-… → N for every file this write added: only those
-        # partitions are read back (an empty append reads nothing)
-        touched = sorted({
-            int(os.path.basename(os.path.dirname(f)).split("=", 1)[1])
-            for f in set(data_files(shards_dir)) - before
-        })
-        back = back.filter(F.col("shard").isin(touched)) if touched else None
+        last = max(rows, default=-1)
+        # only the shards this append added are read back
+        back = back.filter(F.col("shard") > last) if on_disk[-1] > last else None
     if back is not None:
         for r in back.groupBy("shard").agg(
             F.count("*").alias("docs"), F.sum("n_tok").alias("tokens"),

@@ -1160,3 +1160,51 @@ def test_increment_self_heals_after_manifest_crash(spark, sf_dir, even_base, tmp
     assert dig.exceptAll(want).isEmpty() and want.exceptAll(dig).isEmpty()
     want_sig = dedup.minhash_signatures(shards.select("doc_id", "text"), k=3, n_hashes=MINHASH_N)
     assert sig.exceptAll(want_sig).isEmpty() and want_sig.exceptAll(sig).isEmpty()
+
+
+def test_increment_clash_on_a_gate_dropped_doc_raises_on_every_path(
+    spark, sf_dir, even_base, tmp_path
+):
+    """Every batch id is checked, also that of a document the quality
+    gate drops, with and without a recorded base id range. The clean
+    documents' ids lie past the base range, so only the reused id makes
+    the ranges overlap."""
+    import pyspark.sql.functions as F
+
+    from climate_data_pipelines_spark.plans.llm_curation import curate_increment
+
+    out = _copy_base(even_base, tmp_path)
+    with open(f"{out}/manifest.json") as fh:
+        manifest = json.load(fh)
+    clean = _odd_batch(spark, sf_dir, id_shift=1_000_000)
+    reused = clean.limit(1).withColumn("doc_id", F.lit(manifest["min_doc_id"]).cast("bigint"))
+    batch = clean.unionByName(reused.withColumn("text", F.lit("too short")))
+    before = _snapshot(out)
+    with pytest.raises(ValueError, match="globally unique doc_ids"):
+        curate_increment(spark, batch, out)
+    assert _snapshot(out) == before
+
+    del manifest["min_doc_id"], manifest["max_doc_id"]
+    with open(f"{out}/manifest.json", "w") as fh:
+        json.dump(manifest, fh)
+    with pytest.raises(ValueError, match="globally unique doc_ids"):
+        curate_increment(spark, batch, out)
+
+
+def test_increment_whose_batch_the_gate_empties_keeps_the_manifest(
+    spark, sf_dir, even_base, tmp_path
+):
+    """A batch the quality gate drops entirely, with ids interleaving
+    the base range: the clash check still runs and passes, and the
+    manifest keeps the base's rows and id range."""
+    import pyspark.sql.functions as F
+
+    from climate_data_pipelines_spark.plans.llm_curation import curate_increment
+
+    out = _copy_base(even_base, tmp_path)
+    with open(f"{out}/manifest.json") as fh:
+        base = json.load(fh)
+    batch = _odd_batch(spark, sf_dir).withColumn("text", F.lit("too short"))
+    manifest = curate_increment(spark, batch, out)
+    assert _manifest_rows(manifest) == _manifest_rows(base)
+    assert _manifest_rows(manifest) == _manifest_from_read_back(spark, out)

@@ -64,12 +64,13 @@ def test_runner_skip_flags(spark, sf_dir, outdir):
     assert written == {}
 
 
-def test_runner_reports_from_observations_in_at_most_four_jobs(spark, outdir, capsys):
+def test_runner_reports_without_read_back_in_at_most_four_jobs(spark, outdir, capsys):
     """The ETL reads, writes parquet and writes GeoJSON, and nothing
-    else: its per-month report and its GeoJSON document count ride the
-    writes as Observation metrics (10 jobs when it read the GeoJSON
-    back and re-scanned the input). The printed counts equal counts
-    taken independently from the input rows."""
+    else: its per-month report comes from the parquet partitions'
+    footers and its GeoJSON document count from an Observation on the
+    write (10 jobs when it read the GeoJSON back and re-scanned the
+    input). The printed counts equal counts taken independently from
+    the input rows."""
     import datetime as dt
     import math
 
@@ -111,7 +112,7 @@ def test_runner_reports_from_observations_in_at_most_four_jobs(spark, outdir, ca
     lines = spark.read.text(f"{outdir}/out/geojson").count()
     assert lines == len(want)
 
-    # parquet skipped: the month counts ride the GeoJSON write instead
+    # parquet skipped: the report is its own aggregate
     args.skip_parquet, args.output = True, f"{outdir}/out2"
     written = runner.run(args, spark=spark)
     assert written == {"geojson_docs": len(want)}
@@ -120,3 +121,10 @@ def test_runner_reports_from_observations_in_at_most_four_jobs(spark, outdir, ca
     args.skip_geojson, args.output = True, f"{outdir}/out3"
     assert runner.run(args, spark=spark) == {}
     assert capsys.readouterr().out.splitlines() == printed
+
+    # a window without rows: both sinks write nothing, nothing printed
+    args.skip_parquet = args.skip_geojson = False
+    args.start_year, args.end_year, args.output = 2020, 2020, f"{outdir}/out4"
+    assert runner.run(args, spark=spark) == {"observations": 0, "geojson_docs": 0}
+    out = capsys.readouterr().out.splitlines()
+    assert out == ["WARNING: no observations in the selected range (empty input)"]
