@@ -177,6 +177,43 @@ AUTO_ISOLATE_DELTA = 1.3
 AUTO_ISOLATE_BUDGET_SEC = 150.0
 
 
+def merge_round(
+    hist: dict,
+    rnd: str,
+    timings: dict[str, float],
+    canary_med: dict[str, float],
+    isolated: dict[str, float],
+    canary_ratio: float | None,
+    cpus: int | None,
+) -> None:
+    """Merge one full-width sf0.1 run into the history ``hist`` (the
+    contents of BENCH_HISTORY.json) as round ``rnd``.
+
+    - ``_canary`` is min-merged: the track records the BEST host
+      window seen, so a later degraded-window run must not clobber an
+      earlier clean one (that would shrink every future canary_ratio
+      toward 1).
+    - The round row (query → seconds) and its ``_isolated`` row (the
+      suite-position-free canary and auto-isolate medians) are
+      replaced only by a run whose ``canary_ratio`` is no worse than
+      the one ``_provenance`` records for the round; a run with no
+      ratio never replaces one that has it. ``_provenance`` stamps the
+      kept row's ``cpus`` and ``canary_ratio``.
+    """
+    canary_hist = hist.setdefault("_canary", {})
+    prev_c = canary_hist.get(rnd, {})
+    canary_hist[rnd] = {
+        n: round(min(v, prev_c.get(n, v)), 3) for n, v in canary_med.items()
+    }
+    prov = hist.setdefault("_provenance", {})
+    recorded = (prov.get(rnd) or {}).get("canary_ratio")
+    if recorded is not None and (canary_ratio is None or canary_ratio > recorded):
+        return
+    hist[rnd] = timings
+    hist.setdefault("_isolated", {})[rnd] = {**canary_med, **isolated}
+    prov[rnd] = {"cpus": cpus, "canary_ratio": canary_ratio}
+
+
 def _drop_stale_checkpoints(spark) -> None:
     """Unpersist every cached/checkpointed RDD after a timed run.
 
@@ -544,36 +581,20 @@ def main() -> None:
             _cpus_env.isdigit() and int(_cpus_env) >= (os.cpu_count() or 1)
         )
         if sf == 0.1 and full_width:
-            hist_file[cur_round] = timings
-            # min-merge within the round: the canary track records the
-            # BEST host window seen, so a later degraded-window run
-            # must not clobber an earlier clean one (that would shrink
-            # every future canary_ratio toward 1)
-            prev_c = canary_hist.get(cur_round, {})
-            canary_hist[cur_round] = {
-                n: round(min(v, prev_c.get(n, v)), 3)
-                for n, v in canary_med.items()
-            }
-            # isolated-median track: suite-position-free measurements
-            # (canaries + this run's auto-isolations) — the numbers a
-            # cross-round comparison should actually use
-            iso_hist = hist_file.setdefault("_isolated", {})
-            iso_hist[cur_round] = {
-                **canary_med,
-                **{n: v["median"] for n, v in auto_isolated.items()},
-            }
+            merge_round(
+                hist_file, cur_round, timings, canary_med,
+                {n: v["median"] for n, v in auto_isolated.items()},
+                canary_ratio, os.cpu_count(),
+            )
         with open(hist_path, "w") as fh:
             json.dump(hist_file, fh, indent=1, sort_keys=True)
 
-        round_keys = [r for r in sorted(hist_file) if not r.startswith("_")]
-        history_rounds.extend(round_keys)
-        if history_rounds and history_rounds[-1] == cur_round:
-            history_rounds[-1] = "current"
-            round_meds = [hist_file[r] for r in round_keys]
-        else:
-            round_meds = [hist_file[r] for r in round_keys]
-            history_rounds.append("current")
-            round_meds.append(timings)
+        # "current" is this run, whether or not it became the round's row
+        round_keys = [
+            r for r in sorted(hist_file) if not r.startswith("_") and r != cur_round
+        ]
+        history_rounds.extend(round_keys + ["current"])
+        round_meds = [hist_file[r] for r in round_keys] + [timings]
         for name in timings:
             history[name] = [m.get(name) for m in round_meds]
     except Exception:

@@ -4,8 +4,12 @@ Replaces the reference's config-driven path helpers
 (``pipeline_config.py:67-91`` — get_s3_path/get_local_path/
 get_output_dir, SURVEY.md §2.1 S7) with a real catalog: every table
 has a declared StructType (never ``inferSchema`` — a full-file scan at
-100 TB, SURVEY.md §1.3) and a loader that registers temp views so the
-whole surface is reachable from ``spark.sql`` too.
+100 TB, SURVEY.md §1.3) that every load reads with, and a loader that
+registers temp views so the whole surface is reachable from
+``spark.sql`` too. A load launches no Spark job: the one fact the
+declaration cannot know — which columns a file really holds, and in
+which timestamp unit — comes from one data file's footer, read on the
+driver.
 """
 
 from __future__ import annotations
@@ -14,6 +18,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from climate_data_pipelines_spark import sinks
 
 # Explicit schemas for the driver-generated fixture tables
 # (FIXTURES.md; verified against the sf0.001 parquet footers).
@@ -89,11 +95,12 @@ TABLES: dict[str, T.StructType] = {
     "events": T.StructType(
         [
             T.StructField("event_id", T.LongType()),
-            # parquet TIMESTAMP(NANOS, isAdjustedToUTC=false) → this
-            # environment's Spark 4 reader scans it as TIMESTAMP_NTZ
-            # (µs-truncated), same as o_orderdate/l_shipdate; kept NTZ
-            # on purpose — naive timestamps match the DuckDB oracle
-            # regardless of session timezone
+            # the fixtures store TIMESTAMP(MICROS, isAdjustedToUTC=
+            # false), read as TIMESTAMP_NTZ like o_orderdate/l_shipdate;
+            # kept NTZ on purpose — naive timestamps match the DuckDB
+            # oracle regardless of session timezone. A TIMESTAMP(NANOS)
+            # file is read as bigint ns and truncated to µs (see
+            # load_table)
             T.StructField("ts", T.TimestampNTZType()),
             T.StructField("user_id", T.LongType()),
             T.StructField("event_type", T.StringType()),
@@ -129,10 +136,10 @@ def ensure_session_confs(spark: SparkSession) -> None:
     built itself; these are all runtime-settable session configs.
     - UTC session timezone → year()/month()/window() agree with the
       DuckDB oracle on naive parquet timestamps.
-    - nanosAsLong → compat shim for Spark readers that would otherwise
-      fail on TIMESTAMP(NANOS) parquet. This environment's Spark 4
-      reader ignores it and scans events.ts as TIMESTAMP_NTZ directly
-      (µs-truncated); normalize_ns_timestamp stays a no-op then.
+    - nanosAsLong → a TIMESTAMP(NANOS) parquet column reads as bigint
+      nanoseconds (Spark cannot read it as a timestamp);
+      ``load_table`` declares such a column bigint and
+      ``normalize_ns_timestamp`` truncates it to µs.
     """
     for k, v in (
         ("spark.sql.session.timeZone", "UTC"),
@@ -150,6 +157,17 @@ def table_path(sf_dir: str, name: str) -> str:
     return f"{sf_dir}/{name}.parquet"
 
 
+def _data_files(path: str) -> list[str]:
+    """The parquet files of the table at ``path``: the file itself, or
+    the sorted ``*.parquet`` files of a directory (a driver-side
+    listing; no job)."""
+    if os.path.isdir(path):
+        return [
+            os.path.join(path, f) for f in sorted(os.listdir(path)) if f.endswith(".parquet")
+        ]
+    return [path]
+
+
 def table_rows(sf_dir: str, name: str) -> int:
     """Exact row count from the parquet FOOTER (driver-side pyarrow
     metadata read — no Spark job, no data pages touched). The cheap
@@ -158,27 +176,74 @@ def table_rows(sf_dir: str, name: str) -> int:
     on a real catalog this is the table-stats lookup."""
     import pyarrow.parquet as pq
 
-    import os
+    return sum(
+        pq.ParquetFile(f).metadata.num_rows
+        for f in _data_files(table_path(sf_dir, name))
+    )
 
-    p = table_path(sf_dir, name)
-    if os.path.isdir(p):
-        return sum(
-            pq.ParquetFile(os.path.join(p, f)).metadata.num_rows
-            for f in os.listdir(p)
-            if f.endswith(".parquet")
-        )
-    return pq.ParquetFile(p).metadata.num_rows
+
+def _read_schema(name: str, path: str) -> T.StructType | None:
+    """The schema to read the table ``name`` at ``path`` with: the
+    declaration ``TABLES[name]``, checked against and fitted to the
+    footer of its first data file (a driver-side pyarrow read; no
+    Spark job), in the file's column order as inference gives it.
+
+    - A declared top-level column the file lacks raises ``ValueError``
+      (a declared read would return it as all NULLs).
+    - A TIMESTAMP(NANOS) column is declared bigint, since Spark fails
+      at execution reading NANOS as a timestamp (nanosAsLong reads it
+      as bigint ns). The parquet logical type tells NANOS apart from
+      INT96, which Arrow also maps to ``timestamp[ns]``.
+    - A column the catalog does not declare keeps the type Spark
+      recorded in a Spark-written footer; ``None`` (read with
+      inference) when the file is not Spark's.
+    """
+    import json
+
+    import pyarrow.parquet as pq
+
+    declared = TABLES[name]
+    files = _data_files(path)
+    if not files:  # no footer to probe; Spark reports a missing path itself
+        return declared
+    pf = pq.ParquetFile(files[0])
+    names = pf.schema_arrow.names
+    missing = [c for c in declared.fieldNames() if c not in names]
+    if missing:
+        raise ValueError(f"table {name!r}: declared column(s) {missing} absent from {path}")
+    nanos = set()
+    for i in range(len(pf.schema)):
+        col = pf.schema.column(i)
+        lt = col.logical_type
+        if lt.type == "TIMESTAMP" and json.loads(lt.to_json())["timeUnit"] == "nanoseconds":
+            nanos.add(col.path)
+    fields = {
+        f.name: T.StructField(f.name, T.LongType()) if f.name in nanos else f
+        for f in declared.fields
+    }
+    if len(names) > len(fields):
+        recorded = sinks.recorded_schema(pf.metadata)
+        if recorded is None:
+            return None
+        for f in recorded.fields:
+            fields.setdefault(f.name, f)
+    return T.StructType([fields[c] for c in names])
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one fixture table. Parquet carries its own (trusted) footer
-    schema; we read it natively so predicate pushdown / column pruning
-    stats survive, but assert the catalog declaration matches in tests.
+    """Read one fixture table with its declared schema (no
+    schema-inference job), fitted to one data file's footer by
+    ``_read_schema``: a missing column raises, a TIMESTAMP(NANOS)
+    column reads as bigint and is truncated to a µs timestamp, and
+    undeclared columns are kept. Int32 files under a declared bigint
+    load: Spark widens them.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; catalog has {sorted(TABLES)}")
     ensure_session_confs(spark)
-    df = spark.read.parquet(table_path(sf_dir, name))
+    path = table_path(sf_dir, name)
+    schema = _read_schema(name, path)
+    df = (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
     if name == "events":
         df = normalize_ns_timestamp(df, "ts")
     return df

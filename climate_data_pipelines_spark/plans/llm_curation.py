@@ -295,7 +295,7 @@ def _packing_actual_total(spark: SparkSession, out_dir: str, ctx_len: int) -> in
 
     try:
         row = (
-            spark.read.parquet(f"{out_dir}/packing/pieces")
+            sinks.read_parquet(spark, f"{out_dir}/packing/pieces")
             .agg(
                 F.max(
                     F.col("seq") * ctx_len
@@ -350,7 +350,7 @@ def _write_packing(
         training.pack_contexts(docs, ctx_len=ctx_len).write.mode(
             "overwrite"
         ).parquet(pieces_dir)
-        allp = spark.read.parquet(pieces_dir)
+        allp = sinks.read_parquet(spark, pieces_dir)
         training.sequence_manifest(allp).write.mode("overwrite").parquet(
             seqs_dir
         )
@@ -383,7 +383,7 @@ def _write_packing(
     # sequence on (seq pushdown on the appended table — base tail
     # pieces rejoin so the tail's fresh row is COMPLETE, not a delta)
     first_new_seq = base_total // ctx_len
-    seq_in = spark.read.parquet(pieces_dir).filter(
+    seq_in = sinks.read_parquet(spark, pieces_dir).filter(
         F.col("seq") >= first_new_seq
     )
     training.sequence_manifest(seq_in).write.mode("append").parquet(seqs_dir)
@@ -404,7 +404,7 @@ def read_sequence_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
     the largest ``n_pieces`` is the complete one)."""
     from pyspark.sql.window import Window
 
-    seqs = spark.read.parquet(f"{out_dir}/packing/sequences")
+    seqs = sinks.read_parquet(spark, f"{out_dir}/packing/sequences")
     if "_b" in seqs.columns:
         # streamed layout (pack_documents_stream): rows partitioned by
         # micro-batch id — drop the bookkeeping column so batch and
@@ -949,11 +949,7 @@ def curate_increment(
         with open(f"{base_dir}/manifest.json") as fh:
             base_manifest = _json.load(fh)
     base_max_shard = max(sinks.shard_ids_on_disk(base_dir), default=-1)
-    # read with the schema a shard footer records: a file listing,
-    # where schema inference would be a job
-    base = spark.read.schema(sinks.parquet_schema(f"{base_dir}/shards")).parquet(
-        f"{base_dir}/shards"
-    )
+    base = sinks.read_parquet(spark, f"{base_dir}/shards")
     base_range = (
         (base_manifest["min_doc_id"], base_manifest["max_doc_id"])
         if current and "min_doc_id" in base_manifest
@@ -1032,7 +1028,7 @@ def curate_increment(
         uc = url_conf["url_col"]
         new_docs = url_dedup_keep(new_docs, url_col=uc)
         base_urls = (
-            spark.read.parquet(f"{base_dir}/dedup_index/urls")
+            sinks.read_parquet(spark, f"{base_dir}/dedup_index/urls")
             .select(F.col("url_norm").alias("_u"))
             .filter(F.col("_u").isNotNull() & (F.col("_u") != ""))
             .distinct()
@@ -1070,7 +1066,7 @@ def curate_increment(
         batch_stats = textops.domain_stats(
             new_docs, url_col=uc
         ).localCheckpoint(eager=True)
-        base_stats = spark.read.parquet(f"{base_dir}/dedup_index/domain_stats")
+        base_stats = sinks.read_parquet(spark, f"{base_dir}/dedup_index/domain_stats")
         profile = textops.domain_profile_from_stats(
             base_stats.unionByName(batch_stats)
         ).localCheckpoint(eager=True)
@@ -1138,12 +1134,12 @@ def curate_increment(
         batch_sets = dedup.shingle_sets(survivors).localCheckpoint(
             eager=True
         )
-        base_sets = spark.read.parquet(f"{base_dir}/dedup_index/shingle_sets")
+        base_sets = sinks.read_parquet(spark, f"{base_dir}/dedup_index/shingle_sets")
         # the persisted df table keys on the shingle STRING (stable,
         # auditable format); the candidate core keys on xxhash64 —
         # hash at read and re-aggregate (vocabulary-sized, long keys)
-        base_df = spark.read.parquet(
-            f"{base_dir}/dedup_index/shingle_df"
+        base_df = sinks.read_parquet(
+            spark, f"{base_dir}/dedup_index/shingle_df"
         ).select(F.xxhash64("shingle").alias("shingle_hash"), "_df")
         batch_df = (
             batch_sets.select(
@@ -1231,7 +1227,7 @@ def curate_increment(
         ctx = int(pack_conf["ctx_len"])
         block = base_manifest.get("packing")
         landed = (
-            spark.read.parquet(f"{base_dir}/shards")
+            sinks.read_parquet(spark, f"{base_dir}/shards")
             .filter(F.col("shard") > base_max_shard)
             .select("doc_id", "text")
         )
@@ -1251,7 +1247,7 @@ def curate_increment(
             manifest["packing"] = _write_packing(
                 spark,
                 base_dir,
-                spark.read.parquet(f"{base_dir}/shards").select(
+                sinks.read_parquet(spark, f"{base_dir}/shards").select(
                     "doc_id", "text"
                 ),
                 ctx,

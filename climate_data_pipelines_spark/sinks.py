@@ -490,20 +490,31 @@ def parquet_rows(path: str) -> int:
     return sum(pq.read_metadata(f).num_rows for f in files) if files else -1
 
 
-def parquet_schema(path: str):
-    """The data schema Spark recorded in the footer of the first data
-    file of the Spark-written table at ``path`` — what schema inference
-    would read, without its job. Partition columns are not in it: a
-    read with this schema still takes them from the directory names."""
+def recorded_schema(footer):
+    """The data schema Spark recorded in a parquet ``footer``
+    (``pyarrow.parquet.FileMetaData``) — what schema inference reads
+    from a Spark-written file — or ``None`` for a file Spark did not
+    write. Partition columns are not in it."""
     import json
 
-    import pyarrow.parquet as pq
     from pyspark.sql.types import StructType
 
-    meta = pq.read_metadata(data_files(path)[0]).metadata
-    return StructType.fromJson(
-        json.loads(meta[b"org.apache.spark.sql.parquet.row.metadata"])
-    )
+    raw = (footer.metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+    return None if raw is None else StructType.fromJson(json.loads(raw))
+
+
+def read_parquet(spark, path: str):
+    """The Spark-written table at ``path``, read with the schema the
+    footer of its first data file records: a file listing, where
+    schema inference would be a job. The read still takes partition
+    columns from the directory names. With no data file, or a footer
+    Spark did not write, it is the plain read, which fails (or reads)
+    as inference does."""
+    import pyarrow.parquet as pq
+
+    files = data_files(path)
+    schema = recorded_schema(pq.read_metadata(files[0])) if files else None
+    return (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
 
 
 def shard_ids_on_disk(out_dir: str) -> list[int]:

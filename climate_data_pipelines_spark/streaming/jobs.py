@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from climate_data_pipelines_spark import sinks
 from climate_data_pipelines_spark.catalog import TABLES, ensure_session_confs
 
 
@@ -541,7 +542,7 @@ def pack_documents_stream(
             # row is COMPLETE, not a delta
             first_new_seq = base_total // ctx_len
             seq_in = (
-                spark.read.parquet(f"{out_dir}/packing/pieces")
+                sinks.read_parquet(spark, f"{out_dir}/packing/pieces")
                 .filter(F.col("seq") >= first_new_seq)
             )
             (

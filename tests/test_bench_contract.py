@@ -52,3 +52,37 @@ def test_headline_line_fits_driver_tail():
     }
     line = json.dumps(out, separators=(",", ":"))
     assert len(line) < 1900 - 350, len(line)
+
+
+def _history(ratio):
+    """A history whose r15 row was measured at canary ratio ``ratio``."""
+    hist = {}
+    bench.merge_round(hist, "r15", {"q02": 1.0}, {"q02": 0.2}, {"q17": 0.5}, ratio, 4)
+    return hist
+
+
+def test_merge_round_first_run_writes_row():
+    hist = _history(1.2)
+    assert hist["r15"] == {"q02": 1.0}
+    assert hist["_canary"]["r15"] == {"q02": 0.2}
+    assert hist["_isolated"]["r15"] == {"q02": 0.2, "q17": 0.5}
+    assert hist["_provenance"]["r15"] == {"cpus": 4, "canary_ratio": 1.2}
+
+
+def test_merge_round_better_run_replaces_row():
+    hist = _history(1.2)
+    bench.merge_round(hist, "r15", {"q02": 0.8}, {"q02": 0.1}, {}, 1.0, 8)
+    assert hist["r15"] == {"q02": 0.8}
+    assert hist["_isolated"]["r15"] == {"q02": 0.1}
+    assert hist["_provenance"]["r15"] == {"cpus": 8, "canary_ratio": 1.0}
+
+
+def test_merge_round_worse_run_keeps_row():
+    hist = _history(1.2)
+    for worse in (1.5, None):
+        bench.merge_round(hist, "r15", {"q02": 3.0}, {"q02": 0.6}, {}, worse, 4)
+        assert hist["r15"] == {"q02": 1.0}
+        assert hist["_isolated"]["r15"] == {"q02": 0.2, "q17": 0.5}
+        assert hist["_provenance"]["r15"] == {"cpus": 4, "canary_ratio": 1.2}
+    # the canary track keeps the best window of every run
+    assert hist["_canary"]["r15"] == {"q02": 0.2}

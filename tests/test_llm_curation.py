@@ -12,6 +12,10 @@ import pytest
 # even/odd halves (test_curate_job_counts_bounded), as measured
 CORPUS_JOBS_MAX = 45
 INCREMENT_JOBS_MAX = 53
+# a packing increment of 30 documents onto a 60-document base
+# (test_packing_increment_job_count); 63 while the packing and index
+# tables were read with schema inference
+PACKING_INCREMENT_JOBS_MAX = 60
 
 
 @pytest.fixture(scope="module")
@@ -836,6 +840,16 @@ def test_cluster_mix_stage_rebalances_boilerplate_mode(
     assert kept <= kept2
 
 
+_DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
+
+
+def _lines_doc(i, n_lines=3):
+    return "\n".join(
+        f"w{i}a{j} w{i}b{j} w{i}c{j} w{i}d{j} w{i}e{j}."
+        for j in range(n_lines)
+    )
+
+
 def test_packing_stage_increment_continues_stream(
     spark, tmp_path_factory
 ):
@@ -856,15 +870,8 @@ def test_packing_stage_increment_continues_stream(
         read_sequence_manifest,
     )
 
-    def lines_doc(i, n_lines=3):
-        return "\n".join(
-            f"w{i}a{j} w{i}b{j} w{i}c{j} w{i}d{j} w{i}e{j}."
-            for j in range(n_lines)
-        )
-
-    schema = "doc_id long, text string, lang string, source string, n_chars long"
     docs = spark.createDataFrame(
-        [(i, lines_doc(i), "en", "srcA", 60) for i in range(60)], schema
+        [(i, _lines_doc(i), "en", "srcA", 60) for i in range(60)], _DOC_SCHEMA
     )
     day0_dir = str(tmp_path_factory.mktemp("pack_day0"))
     out = str(tmp_path_factory.mktemp("pack_out"))
@@ -899,8 +906,8 @@ def test_packing_stage_increment_continues_stream(
 
     # day-1 increment: fresh unique docs with ids after the base
     day1 = spark.createDataFrame(
-        [(i, lines_doc(i), "en", "srcA", 60) for i in range(1000, 1030)],
-        schema,
+        [(i, _lines_doc(i), "en", "srcA", 60) for i in range(1000, 1030)],
+        _DOC_SCHEMA,
     )
     combined = curate_increment(spark, day1, out)
     blk1 = combined["packing"]
@@ -942,8 +949,8 @@ def test_packing_stage_increment_continues_stream(
     with open(f"{out}/manifest.json", "w") as fh:
         _json.dump(m, fh)
     day2 = spark.createDataFrame(
-        [(i, lines_doc(i), "en", "srcA", 60) for i in range(2000, 2010)],
-        schema,
+        [(i, _lines_doc(i), "en", "srcA", 60) for i in range(2000, 2010)],
+        _DOC_SCHEMA,
     )
     combined2 = curate_increment(spark, day2, out)
     blk2 = combined2["packing"]
@@ -1053,6 +1060,28 @@ def test_curate_job_counts_bounded(spark, sf_dir, even_base, tmp_path):
     inc_jobs = _jobs_of(spark, "increment", lambda: curate_increment(spark, batch, out))
     assert even_base[1] <= CORPUS_JOBS_MAX
     assert inc_jobs <= INCREMENT_JOBS_MAX
+
+
+def test_packing_increment_job_count(spark, tmp_path):
+    """The packing continuation reads the tables the engine wrote with
+    the schema their footers record: no schema-inference jobs."""
+    from climate_data_pipelines_spark.plans.llm_curation import (
+        curate_corpus,
+        curate_increment,
+    )
+
+    def docs(ids):
+        return spark.createDataFrame([(i, _lines_doc(i), "en", "srcA", 60) for i in ids], _DOC_SCHEMA)
+
+    day0, out = str(tmp_path / "day0"), str(tmp_path / "out")
+    docs(range(60)).write.parquet(f"{day0}/documents.parquet")
+    curate_corpus(spark, day0, out, alpha=1.0, tokens_per_shard=300, pack_ctx_len=64)
+    batch = docs(range(1000, 1030))
+    jobs = _jobs_of(spark, "packing-increment", lambda: curate_increment(spark, batch, out))
+    with open(f"{out}/manifest.json") as fh:
+        manifest = json.load(fh)
+    assert manifest["packing"]["total_tokens"] == manifest["total_tokens"]
+    assert jobs <= PACKING_INCREMENT_JOBS_MAX
 
 
 def test_increment_id_clash_raises_before_any_write(spark, sf_dir, even_base, tmp_path):

@@ -127,7 +127,7 @@ def main():
         only = set(DRIVER_WINDOW)
 
     from climate_data_pipelines_spark import get_spark
-    from climate_data_pipelines_spark.catalog import TABLES, load_table
+    from climate_data_pipelines_spark.catalog import TABLES, normalize_ns_timestamp, table_path
     from climate_data_pipelines_spark.invariants import INVARIANTS
     from climate_data_pipelines_spark.queries import REGISTRY
 
@@ -142,14 +142,18 @@ def main():
         SparkSession.builder.master("local[8]").getOrCreate()
     spark = get_spark(app_name="oracle-check", shuffle_partitions=8)
 
-    # Preflight: declared catalog schema must equal the scanned schema
-    # for every table, so parquet-reader drift (e.g. TIMESTAMP_NTZ under
-    # a new Spark reader) fails loudly HERE, not deep inside a query's
-    # cast (the q104 r3 failure mode).
+    # Preflight: declared catalog schema must equal what a plain
+    # schema-inference read scans for every table, so parquet-reader
+    # drift (e.g. TIMESTAMP_NTZ under a new Spark reader) fails loudly
+    # HERE, not deep inside a query's cast (the q104 r3 failure mode).
+    # Not load_table: it reads with the declared schema, so its schema
+    # equals the declaration by construction.
     drift = []
     for t in TABLE_NAMES:
-        got = {f.name: f.dataType.simpleString()
-               for f in load_table(spark, sf_dir, t).schema.fields}
+        scanned = spark.read.parquet(table_path(sf_dir, t))
+        if t == "events":
+            scanned = normalize_ns_timestamp(scanned, "ts")
+        got = {f.name: f.dataType.simpleString() for f in scanned.schema.fields}
         want = {f.name: f.dataType.simpleString() for f in TABLES[t].fields}
         ok = got == want
         print(f"SCHEMA {t}: {'parity' if ok else f'DRIFT got={got} declared={want}'}")
