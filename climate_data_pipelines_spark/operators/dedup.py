@@ -1572,10 +1572,11 @@ def containment_vs_index(
         .localCheckpoint(eager=False)
     )
     if candidates_only:
-        # measurement hook (tools/scale_proof.py): the candidate-pair
-        # table before the exact verify — its growth rate IS the
-        # operator's scaling claim (O(df) per prefix shingle; ~linear
-        # on Zipf text, ~quadratic on the fixed-vocab soup)
+        # measurement hook (the q179_candidates case of
+        # tools/scale_proof.py): the candidate-pair table before the
+        # exact verify — its growth rate IS the operator's scaling
+        # claim (O(df) per prefix shingle; ~linear on Zipf text,
+        # ~quadratic on the fixed-vocab soup)
         return cand
     a_sets = small_sets.filter(
         (F.col("n_sh") <= small_max) & (F.col("n_sh") >= 1)

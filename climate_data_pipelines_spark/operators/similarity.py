@@ -205,9 +205,10 @@ def derive_ivf_params(
     i.i.d.-fixture working point). On CLUSTERED corpora — the geometry
     real embeddings have — a query's true neighbors live in the few
     sub-cells k-means carved its cluster into, so a much lower
-    fraction (1/32 in tools/ann_scale_proof.py, the production-style
-    setting) keeps recall while probing only a few % of the corpus;
-    ``min_probed_members`` still rescues tiny corpora.
+    fraction (1/32 in the ann_clustered case of tools/scale_proof.py,
+    the production-style setting) keeps recall while probing only a
+    few % of the corpus; ``min_probed_members`` still rescues tiny
+    corpora.
     """
     import math
 

@@ -909,7 +909,8 @@ def bpe_train(
     which is why the reference-parity invariant pins the m=1 path and
     the batched path is gated by its own equivalence property test.
     Rounds drop from n_merges to ~n_merges/batch_m
-    (tools/bpe_scale_proof.py measures a 1,000-merge train).
+    (SCALEPROOF.json ``bpe_train_1k`` records a 1,000-merge train; its
+    retired script is listed in docs/SCALEPROOF.md).
 
     At or under ``scale.DRIVER_LOCAL_MAX["bpe"]`` distinct words the
     merge loop runs driver-side over one Arrow fetch of the (word,

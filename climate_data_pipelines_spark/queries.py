@@ -1934,8 +1934,8 @@ def q73(spark, sf_dir):
     # recall exactly ON the 0.9 invariant gate in BENCH_r09 (one
     # k-means-seed wobble from red; 0.967 in r8; 0.7 measured 0.933),
     # so the floor buys ~0.95+ with margin. Clustered production corpora should leave
-    # the default 0.0 — the mog scale proof (tools/ann_scale_proof.py)
-    # holds its recall probing ~3% of members
+    # the default 0.0 — the mog scale proof (the ann_clustered case of
+    # tools/scale_proof.py) holds its recall probing ~3% of members
     return similarity.ann_ivf_topk(
         emb, _query_vectors(spark, sf_dir), k=10,
         n_cells=None, n_probe=None, corpus_n=table_rows(sf_dir, "embeddings"),
@@ -6083,199 +6083,20 @@ def q192(spark, sf_dir):
 # ---------------------------------------------------------------------------
 #
 # The verification driver checks the FIRST 50 entries of
-# ``__spark_entry__.queries()`` per round (dict insertion order).
-# DRIVER_WINDOW is the explicit, exported window for THIS round;
-# ``__spark_entry__`` orders its returned dicts by it. REGISTRY itself
-# stays in definition order — no import-time mutation, so registry
-# iteration order is not load-bearing hidden state (round-2 advice).
+# ``__spark_entry__.queries()`` (dict insertion order);
+# ``__spark_entry__`` orders its returned dicts by DRIVER_WINDOW.
+# REGISTRY itself stays in definition order, so registry iteration
+# order is not load-bearing hidden state. The window's rule, pinned by
+# tests/test_scale_discipline.py::test_driver_window_covers_priority_queries:
+#
+# - exactly 50 distinct registry names;
+# - never-driver-checked queries lead, then the stalest driver rows;
+# - 9 or fewer rows-only (oracle-less) slots, so oracle-checked slots
+#   stay the majority.
+#
 # Queries outside the window stay regression-covered by
 # tools/check_oracle.py over all entries (tests run the same
 # differential).
-#
-# Rotation schedule:
-#   round 1 (implicit): q01-q37, q72, q85-q105            → 44 green
-#   round 2: q99 + LLM suite + function suites + scale ops → 49 green
-#   round 3 (this list): the 22 never-driver-checked queries
-#     (q32, q34, q42, q48-q57, q59, q69, q73, q84, q92, q118-q121),
-#     q111 (r2's one red — oracle type artifact, fixed), every query
-#     whose plan or oracle changed this round (q37/q41/q90 minhash
-#     widening, q121 keeper tiebreak, new q122), first checks of the
-#     round-3 additions (q123-q128), and re-verification of
-#     touched-module peers (q36-q43) + a dozen round-1 classics that
-#     have not had a driver row since round 1.
-#   round 4 (this list): everything whose plan/oracle/environment
-#     changed this round — q104 (the r3 red: NTZ-safe epoch cast,
-#     MUST re-pin), q92 (oracle now semi-joins the packaged coastline
-#     parquet), q126 (adaptive-plane semantic dedup), q54 (real PNG
-#     decode), q55 (Hamming-2 multiprobe), q129 (new, first check) —
-#     q130-q133 (new ops, first check) — plus ALL 34 remaining
-#     r1-only queries (3 rounds without a driver row) and the 6
-#     oldest r2-only queries, preferring the events.ts-adjacent ones
-#     (q83/q93/q110) since that column's scanned type changed.
-#   round 5 (this list): (a) q134/q135 — the only two queries NO
-#     driver round has ever checked; (b) everything whose plan or
-#     hash family changed this round and must re-prove — the minhash
-#     suite (md5→sha2-256 4-way split for widths >8: q37/q41/q90/
-#     q122/q129), the spread_for_cpu repartition adopters (q42/q123/
-#     q124/q126/q127/q132), the LSH null-vector guard + adaptive-IVF
-#     queries (q55/q73), and q92 (Spark side now pins the packaged
-#     mask explicitly, immune to the env override); (c) 26 of the 45
-#     remaining r2/r3-only stale queries, oldest first (q40…q94) —
-#     eight slots went to first-checks of the round-5 additions
-#     q136-q143 (edit-distance verify, batch sessionization,
-#     stratified sampling, bloom decontamination, PQ ANN,
-#     incremental cross-corpus dedup, domain cap, quality
-#     calibration).
-#     Leftover for round 6: q95/q97-q99/q107-q109/q111-q113/
-#     q115-q121/q125/q128 (19) — after r6 every registry query has a
-#     driver row no older than 2 rounds.
-#   round 5b (late-round additions): q145-q154 (funnel, retention,
-#     gap-fill LOCF + linear-interpolate twins, paths, z-score + MAD
-#     outliers, SCD2 intervals, BM25, inverted index) take the first
-#     10 slots as never-driver-checked; the 10 youngest stale-cohort
-#     entries (q71/q74-q82, all r2-green and judge-replayed green
-#     every round since) move to the round-6 leftover list.
-#   round 6 (this list): (a) q151 lead — the r5 driver ERROR, output
-#     schema fixed (postings serialized to string in both twins);
-#     (b) the 7 queries NO driver round has ever checked (q156,
-#     q161-q163 which registered after the r5 window froze, and the
-#     new q164 ranked-BPE kernel, q165 binned range join, q166
-#     semantic decontamination, q168 temperature mix, q171 shard
-#     assignment);
-#     (c) re-proofs of everything items
-#     1-3/5/7 touched — semantic dedup's new pair-ids-first default
-#     (q126), the CC checkpoint-unpersist adopters (q90/q122/q141),
-#     the ANN family whose derive params gained knobs (q55/q73/q140);
-#     (d) the full documented leftover list — the 19 stale
-#     r2/r3-only queries + the 10-query cohort moved in 5b; (e) 6
-#     oldest r4-only queries (q83/q93/q106/q110;
-#     q102/q104/q105/q130/q133 wait for r7). Rows-only slots: 9 (q156,
-#     q161-q164, q126, q55, q73, q140) <= 9 — which is why the
-#     late-round rows-only q167 (image near-dup) ALSO waits for r7:
-#     a 10th rows-only slot would break the cap; its invariant runs
-#     in every replay meanwhile.
-
-#   round 7 (this list): (a) lead with the only three registry
-#     queries NO driver round has ever checked — q167/q169/q170
-#     (image/audio/video perceptual near-dup, rows+INV; they waited
-#     out round 6 behind the rows-only<=9 cap); (b) the five stale
-#     r4-only queries the r6 note scheduled (q102/q104/q105/q130/
-#     q133); (c) re-proofs of everything round 7 touches — the
-#     connected-components scale work (q90/q122/q141/q161), the
-#     q136 candidate-join length bucketing; (d) the stalest
-#     remaining cohort by driver CORRECTNESS recency: all four
-#     r2-only queries (q67/q68/q70/q94) and the full 29-query
-#     r3-only cohort (q01…q84 below); (e) four r4 fillers
-#     (q05/q100/q101/q103) keeping the list at exactly 50.
-#     Rows-only slots: q167/q169/q170, q161, q34, q59, q69, q84
-#     = 8, plus the slot intentionally kept free at rotation time —
-#     taken mid-round by the new q172 (MJPEG-in-AVI container
-#     decode, rows+INV) = 9 <= 9; the q103_regrid filler yields its
-#     seat to keep the window at exactly 50.
-#   round 8 (this list): (a) lead with q173/q174 — after r7 they are
-#     the ONLY registry queries never driver-checked (both judge-replay
-#     green in the r7 verdict: q173 rows+INV holdout acc 0.810, q174
-#     full oracle PASS); q173's output orderBy was dropped first so the
-#     scale-discipline suite is green before the window ships; (b) the
-#     complete 36-query r4-only cohort — the stalest driver rows left
-#     (4 rounds old), including the q05/q100/q101/q103 fillers that
-#     yielded their r7 seats; (c) re-proofs of every plan round 8
-#     changes — q176 (containment verify join salted/bucketed), q177
-#     (trigram scoring semi-joined + broadcast backoff), q126
-#     (semantic-dedup regression fix), q124 (per-band simhash
-#     candidate cap), q136 (candidate-join follow-up), q166 (isolated
-#     re-measure / possible bisect); (d) six oldest r5-only oracle
-#     queries (q37/q40/q123/q127/q129/q132). Rows-only slots: q173,
-#     q131, q54, q72, q88, q89, q91, q126 = 8 <= 9.
-#   round 9 (this list): (a) the COMPLETE 40-query r5-only stale
-#     cohort — after this round no registry query's driver row is
-#     older than round 6 (the r8 verdict's item 5, the whole list:
-#     q40-q47 subset, q58-q66, q92, q123, q129, q132, q134/q135,
-#     q137-q139, q142-q160 subset); (b) re-proofs of every plan
-#     round 9 touches — the spread_for_cpu size gate's adopters with
-#     new small-scale plans (q177/q178/q181), the df_cap-observed
-#     prefix join (q179), the LUT-rewritten JPEG entropy decoder
-#     (q172, rows+INV), the levenshtein repartition-target change
-#     (q136), the WARC resync sanity gates (q174), the classifier's
-#     co-partitioned persist + early stopping (q173, rows+INV);
-#     (c) the two pipeline-composition neighbors (q175 URL dedup now
-#     feeding curation stage 0, q176 the containment family peer).
-#     Rows-only slots: q134, q135, q144, q155, q157, q158, q42,
-#     q172, q173 = 9 <= 9 (exactly at the cap).
-#     Mid-round amendment: the four round-9 additions q182-q185
-#     (cross-source overlap matrix, Gopher rule gate, domain
-#     reputation, contamination report — all full-oracle) take the
-#     lead as never-driver-checked; the four pure-function suites
-#     q63/q64/q65/q66 yield their seats to the round-10 leftover
-#     list (lowest-risk members of the stale cohort: expression-only
-#     plans untouched since r2, judge-replay green every round since).
-#     q186 (C4 line filter) registered after these seats were spent —
-#     it waits for the r10 window like q167/q172 did, replay-checked
-#     meanwhile.
-#   round 10 (this list): (a) q186 leads — the one never-driver-
-#     checked query; (b) re-proofs of every plan round 10 touches —
-#     the hash-keyed occurrence-level trigram LM rewrite (q177/q181),
-#     the gopher zero-token guard + shared-helper refactor (q183),
-#     the domain-reputation mergeable-stats refactor + url_host
-#     userinfo/port fix (q184, q175), the IVF probe-floor retune
-#     (q73), the jpeg floor-proof/decode follow-up (q172); (c) the
-#     four expression suites q63-q66 (last r5 rows — the seats
-#     promised when they yielded to q182-q185); (d) the r6 stale
-#     cohort (driver rows 4 rounds old after this window) — all of it
-#     except q110/q115/q116/q117/q83, which yield to the cap and
-#     lead round 11. Rows-only slots: q73, q172, q55, q140, q156,
-#     q162, q163, q164 = 8 <= 9.
-#   round 11 (this list): (a) lead with the five r6-only queries that
-#     yielded their r10 seats to the cap (q83/q110/q115/q116/q117 —
-#     the oldest driver rows in any CORRECTNESS file, judge-replay
-#     green every round since); (b) the COMPLETE 45-query r7-only
-#     cohort — the only other rows older than r8 — so after this
-#     window every registry query's driver row is <=3 rounds old (the
-#     r10 verdict's item 5 exactly). 5 + 45 = 50, no fillers needed.
-#     The round's llm_curation.py change (deferred domain-stats
-#     commit) has no registry twin — its re-proof is the pytest e2e
-#     parity suite + the full-registry oracle replay. Rows-only
-#     slots: q34, q59, q69, q84, q161, q167, q169, q170 = 8 <= 9.
-#     The round-11 additions q187 (k-means mix) and q188 (PCA)
-#     registered after this window froze — they LEAD round 12 as
-#     never-driver-checked (the q186/q172 precedent), replay-checked
-#     (and numpy-parity-gated) meanwhile.
-#   round 12 (this list): (a) lead with q187/q188 — the only registry
-#     queries never driver-checked, exactly as the r11 rotation note
-#     promised; both plans ALSO changed this round (q188's
-#     sufficient-statistics fold is now two-level, q187's empty-
-#     cluster reseed takes |empty| distinct farthest points), so the
-#     leads double as this round's touched-plan re-proofs; (b) the
-#     COMPLETE 42-query r8-only cohort — the stalest driver rows left
-#     (4 rounds old), including q114_corpus_curation, which re-proves
-#     the curation pipeline's new optional cluster-mix stage is
-#     plan-inert when off; (c) six r9-only fillers, lowest-risk
-#     members of the next-stalest cohort (expression-only full-oracle
-#     suites q40/q41/q45/q46/q47/q58), bringing the list to exactly
-#     50. Rows-only slots: q187, q188, q54, q72, q88, q89, q91,
-#     q126, q131 = 9 <= 9 (at the cap — which is why a round-12
-#     rows-only addition, if any, waits for r13 per the q186/q172
-#     precedent). Leftover for r13: the remaining 38 r9-only rows,
-#     PLUS the round-12 additions q189_context_packing and
-#     q190_sequence_manifest (both full oracle, registered after this
-#     window froze — they LEAD round 13 as never-driver-checked,
-#     replay-checked meanwhile).
-#   round 13 (this list): (a) lead with q189/q190 — the only registry
-#     queries never driver-checked (both FULL oracle), exactly as the
-#     r12 rotation note promised; q189's plan also changed this round
-#     (integer-DIV bucketing + the pack_contexts→increment delegation)
-#     so the lead doubles as the touched-plan re-proof; (b) the
-#     COMPLETE 38-query r9-only cohort — the stalest driver rows left
-#     (4 rounds old), including q174 (WARC) and the multimodal
-#     feature suites; (c) ten r10-cohort fillers, lowest-risk members
-#     of the next-stalest cohort (expression-only full-oracle suites
-#     q63-q66, q77-q79, q93, q97, q98), bringing the list to exactly
-#     50. Rows-only slots: q42, q134, q135, q144, q155, q157, q158,
-#     q173 = 8 <= 9. Leftover for r14: the remaining 40 r10-only
-#     rows, PLUS the round-13 additions q191_leakage_safe_split and
-#     q192_length_bucket_batches (both full oracle, registered after
-#     this window froze — they LEAD round 14 as never-driver-checked,
-#     replay-checked meanwhile, the q189/q190 precedent).
 DRIVER_WINDOW: list[str] = [
     # (a) the two never-driver-checked leads (r12 additions; q189's
     # plan re-touched this round: DIV bucketing + twin delegation)

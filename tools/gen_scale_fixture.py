@@ -27,7 +27,7 @@ events table alone would be 100M rows at that multiplier.
 mixture-of-Gaussians corpus (64 centers, ~0.92 within-cluster pairwise
 cosine, 10% i.i.d. background) — the geometry on which ANN pruning can
 actually be MEASURED (i.i.d. vectors are all ~orthogonal; no index
-prunes them). Used by tools/ann_scale_proof.py.
+prunes them). Used by the ann_clustered case of tools/scale_proof.py.
 
 ``--zipf`` replaces the 30-word-soup documents with a
 Zipf-Mandelbrot corpus (50,000-type vocabulary, token frequency

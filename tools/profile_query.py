@@ -1,18 +1,24 @@
-"""Per-stage profile of one registered query (optimization guide §1).
+"""Per-query build/exec wall split and per-stage profile of registered
+queries.
 
 Usage: python tools/profile_query.py qNNN [qMMM ...] [--runs N]
 
-Runs each query via the noop sink in a fresh session, then dumps the
-Spark status-API stage table (task time, input, shuffle bytes, name)
-so the slow *stage* is identifiable — the local-mode stand-in for the
-UI's Stages page. Run 1 is reported separately from the rest: it
-carries codegen/JIT compile cost the steady-state runs do not.
+Runs each query N times (default 3) via the noop sink and prints one
+JSON line per query: ``build_s`` is the median driver wall of the
+query-function call (py4j plan construction plus any eager stages the
+operator runs), ``exec_s`` the median wall of the noop write of the
+returned frame. Then it dumps the Spark status-API stage table of the
+last run (task time, input, shuffle bytes, name) so the slow *stage*
+is identifiable — the local-mode stand-in for the UI's Stages page.
+The last run is reported because it has its codegen cached.
+Reads SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 import urllib.request
@@ -55,14 +61,16 @@ def main() -> None:
         if full is None:
             print(f"SKIP {name}")
             continue
-        seen = {s["stageId"] for s in stages_snapshot()}
-        walls = []
+        builds, execs = [], []
         per_run_stageids: list[set] = []
         for i in range(runs):
             before = {s["stageId"] for s in stages_snapshot()}
             t0 = time.perf_counter()
-            run(REGISTRY[full].fn(spark, sf_dir))
-            walls.append(time.perf_counter() - t0)
+            df = REGISTRY[full].fn(spark, sf_dir)
+            t1 = time.perf_counter()
+            run(df)
+            builds.append(t1 - t0)
+            execs.append(time.perf_counter() - t1)
             after = stages_snapshot()
             per_run_stageids.append(
                 {s["stageId"] for s in after} - before
@@ -74,8 +82,12 @@ def main() -> None:
             except Exception:
                 pass
         all_stages = {s["stageId"]: s for s in stages_snapshot()}
-        print(f"\n=== {full}  walls: "
-              + ", ".join(f"{w:.3f}" for w in walls))
+        print(json.dumps({
+            "query": full,
+            "build_s": round(statistics.median(builds), 3),
+            "exec_s": round(statistics.median(execs), 3),
+            "runs": runs,
+        }), flush=True)
         # report the LAST run's stages (steady state, codegen cached)
         last = sorted(per_run_stageids[-1])
         total_task_ms = 0
@@ -90,7 +102,8 @@ def main() -> None:
         rows.sort(key=lambda r: -r[0])
         print(f"  stages in last run: {len(rows)}, "
               f"sum task time: {total_task_ms/1000:.2f}s "
-              f"(wall {walls[-1]:.3f}s x {spark.sparkContext.defaultParallelism} cores)")
+              f"(exec wall {execs[-1]:.3f}s x "
+              f"{spark.sparkContext.defaultParallelism} cores)")
         for task_ms, s in rows[:14]:
             nm = s.get("name", "")[:70]
             print(f"  [{s['stageId']:>4}] task={task_ms/1000:7.2f}s "
