@@ -155,6 +155,10 @@ DRIVER_LOCAL_MAX: dict[str, int] = {
     # |tasks|·(dim+1) (~4 MB); above it a feat-keyed aggregate keeps
     # the collect at the (dim+1)-row model size
     "logreg": 262_144,
+    # benchmark decontamination: distinct eval-set shingles, a few MB
+    # of strings at the CC budget's scale; a 10⁹-shingle eval set
+    # exceeds it and takes the Bloom prefilter
+    "decon": 200_000,
 }
 
 
@@ -171,6 +175,26 @@ def fetch_if_small(df: DataFrame, kind: str):
     ck = df.localCheckpoint(eager=False)
     if ck.count() <= DRIVER_LOCAL_MAX[kind]:
         pdf = ck.toPandas()
+        unpersist_checkpoint(ck)
+        return pdf, None
+    return None, ck
+
+
+def fetch_at_most(df: DataFrame, kind: str):
+    """``fetch_if_small`` without the count: materialize ``df`` once
+    and choose the branch for it under ``DRIVER_LOCAL_MAX[kind]``.
+
+    One Arrow collect of ``limit(cap + 1)`` over a lazy
+    ``localCheckpoint`` both sizes the frame and fetches it: the
+    limit's per-partition scan stores every partition of the
+    checkpoint whole, so the checkpoint holds all of ``df`` even when
+    the driver receives only cap + 1 rows. At or under the cap this
+    returns ``(pdf, None)`` and frees the checkpoint. Above it, it
+    returns ``(None, ckpt)``, the materialized frame, which the
+    distributed branch reads instead of recomputing ``df``."""
+    ck = df.localCheckpoint(eager=False)
+    pdf = ck.limit(DRIVER_LOCAL_MAX[kind] + 1).toPandas()
+    if len(pdf) <= DRIVER_LOCAL_MAX[kind]:
         unpersist_checkpoint(ck)
         return pdf, None
     return None, ck

@@ -9,6 +9,13 @@ in the plan, and every shuffle is keyed so the plans scale: the
 benchmark shingle set broadcasts (benchmarks are MBs against a
 multi-TB train corpus), splits are stateless per-row hashes, packing
 is one bounded window per shard.
+
+Decontamination has one entry point for pipelines,
+``decontaminate_any_size``: exact, against the benchmark's shingle
+set fetched to the driver, while that set is within
+``scale.DRIVER_LOCAL_MAX["decon"]``; above it, the Bloom prefilter
+(the ``bloom_decontaminate`` body) over that set, materialized once.
+Both keep the same docs.
 """
 
 from __future__ import annotations
@@ -22,6 +29,7 @@ from pyspark.sql import functions as F
 from climate_data_pipelines_spark.functions.text import shingles, tokens
 from climate_data_pipelines_spark.operators.scale import (
     CPU_CHUNK_BYTES,
+    fetch_at_most,
     spread_for_cpu,
 )
 
@@ -50,17 +58,30 @@ def contaminated_ids(
     distinct doc_id. One shuffle (the final distinct on doc_id); the
     100 TB train side is never shuffled on the shingle key.
     """
-    bench_sh = (
-        benchmark.select(
-            F.explode(F.array_distinct(shingles(text_col, k))).alias("shingle")
-        )
-        .distinct()
+    return _ids_sharing_a_shingle(
+        train, _shingle_set(benchmark, text_col, k), text_col, id_col, k
     )
+
+
+def _shingle_set(benchmark: DataFrame, text_col: str, k: int) -> DataFrame:
+    """The distinct k-token shingles of ``benchmark`` (one ``shingle``
+    column); a null text contributes none."""
+    return benchmark.select(
+        F.explode(F.array_distinct(shingles(text_col, k))).alias("shingle")
+    ).distinct()
+
+
+def _ids_sharing_a_shingle(
+    train: DataFrame, shingle_set: DataFrame, text_col: str, id_col: str, k: int
+) -> DataFrame:
+    """Distinct ids of the ``train`` docs with a k-token shingle in
+    ``shingle_set``: the exploded train shingles probe the broadcast
+    set in a LEFT SEMI join."""
     train_sh = train.select(
         F.col(id_col), F.explode(F.array_distinct(shingles(text_col, k))).alias("shingle")
     )
     return (
-        train_sh.join(F.broadcast(bench_sh), "shingle", "left_semi")
+        train_sh.join(F.broadcast(shingle_set), "shingle", "left_semi")
         .select(id_col)
         .distinct()
     )
@@ -75,7 +96,15 @@ def decontaminate(
 ) -> DataFrame:
     """Drop contaminated train docs (left anti against the flagged id
     set — ids are small relative to the corpus, broadcastable)."""
-    bad = contaminated_ids(train, benchmark, text_col, id_col, k)
+    return _drop_sharing(train, _shingle_set(benchmark, text_col, k), text_col, id_col, k)
+
+
+def _drop_sharing(
+    train: DataFrame, shingle_set: DataFrame, text_col: str, id_col: str, k: int
+) -> DataFrame:
+    """``train`` without the docs that share a k-token shingle with
+    ``shingle_set``: the broadcast anti-join against their ids."""
+    bad = _ids_sharing_a_shingle(train, shingle_set, text_col, id_col, k)
     return train.join(F.broadcast(bad), id_col, "left_anti")
 
 
@@ -329,9 +358,24 @@ def bloom_decontaminate(
     # fuse into pipelined stages, and an eager checkpoint here both
     # ran jobs at plan-construction time and measured SLOWER at x100
     # (6.9 s vs 5.8 s — r6 third-review finding)
-    bench_sh = benchmark.select(
-        F.explode(F.array_distinct(shingles(text_col, k))).alias("shingle")
-    ).distinct()
+    return _bloom_drop(
+        train, _shingle_set(benchmark, text_col, k), text_col, id_col, k,
+        expected_items, fpp, n_hashes,
+    )
+
+
+def _bloom_drop(
+    train: DataFrame,
+    bench_sh: DataFrame,
+    text_col: str,
+    id_col: str,
+    k: int,
+    expected_items: int,
+    fpp: float,
+    n_hashes: int = 3,
+) -> DataFrame:
+    """The ``bloom_decontaminate`` body against the benchmark's
+    shingle set ``bench_sh``, lazy or materialized."""
     fill = fpp ** (1.0 / n_hashes)
     n_bits = max(64, int(math.ceil(n_hashes * expected_items / -math.log(1.0 - fill))))
 
@@ -366,6 +410,38 @@ def bloom_decontaminate(
         .distinct()
     )
     return train.join(bad, id_col, "left_anti")
+
+
+def decontaminate_any_size(
+    train: DataFrame,
+    benchmark: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    k: int = 3,
+    expected_items: int = 100_000,
+    fpp: float = 0.01,
+) -> DataFrame:
+    """Decontamination for an eval set of any size, the curation
+    pipeline's entry point: exact under the driver budget, the Bloom
+    prefilter above it. Both keep the same docs as ``decontaminate``.
+
+    The benchmark's distinct shingle set is built and materialized
+    once, and at most cap + 1 of its rows reach the driver
+    (``scale.fetch_at_most`` under ``DRIVER_LOCAL_MAX["decon"]``). At
+    or under the cap it becomes a local Arrow frame; the exploded train
+    shingles probe it in one broadcast semi-join and the distinct
+    flagged ids are anti-joined away (the ``decontaminate`` body). An
+    empty set keeps every train doc. Above the cap the Bloom body runs
+    with ``expected_items`` and ``fpp`` against the materialized set,
+    so the probe's distinct is not run again; its storage is freed
+    once the returned frame is no longer referenced."""
+    pdf, bench_sh = fetch_at_most(_shingle_set(benchmark, text_col, k), "decon")
+    if bench_sh is not None:
+        return _bloom_drop(train, bench_sh, text_col, id_col, k, expected_items, fpp)
+    if pdf.empty:
+        return train
+    local = train.sparkSession.createDataFrame(pdf, "shingle STRING")
+    return _drop_sharing(train, local, text_col, id_col, k)
 
 
 def hash_split(

@@ -15,9 +15,10 @@ materialization points the algorithms require:
                            keep min id per cluster (candidates
                            checkpointed once; CC iterates on the
                            candidate subgraph only)
-  4. DECONTAMINATION     — Bloom-prefiltered 3-shingle overlap vs the
-                           held-out benchmark corpus (exact-equal
-                           output; no false negatives)
+  4. DECONTAMINATION     — 3-shingle overlap vs the held-out benchmark
+                           corpus: exact against its fetched shingle
+                           set under the driver budget, Bloom-
+                           prefiltered above it (same output)
   5. TEMPERATURE mix     — per-domain share^alpha targets derived from
                            the surviving corpus, stateless md5 keep
   6. SHARD assignment    — hierarchical prefix sum (never a global
@@ -563,9 +564,13 @@ def curate_corpus(
     write trainer shards + manifest to ``out_dir``. The documents
     whose ``source`` equals ``benchmark_source`` play the held-out
     eval set (the q139 convention): they are excluded from training
-    and any train document sharing a 3-shingle with them is dropped.
-    ``bench_stride`` keeps every stride-th benchmark doc — the
-    fixed-eval-set convention for scale runs (real eval sets do not
+    and any train document sharing a 3-shingle with them is dropped:
+    exactly, against the benchmark's shingle set fetched to the driver,
+    while that set is within the driver budget
+    (``DRIVER_LOCAL_MAX["decon"]``), and through the Bloom prefilter
+    above it (``training.decontaminate_any_size``). ``bench_stride``
+    keeps every stride-th benchmark doc — the fixed-eval-set
+    convention for scale runs (real eval sets do not
     grow with the train corpus; on the word-soup scale fixtures an
     unpinned benchmark saturates the 3-shingle space and
     decontaminates the entire corpus, docs/SCALEPROOF.md Finding 4).
@@ -675,7 +680,7 @@ def curate_corpus(
         unique, k=3, n_hashes=MINHASH_N
     ).localCheckpoint(eager=True)
     neardup_free = neardup_dedup(unique, sigs, jaccard_threshold)
-    clean = training.bloom_decontaminate(
+    clean = training.decontaminate_any_size(
         neardup_free, bench, k=3, expected_items=20_000, fpp=0.01
     )
     if containment:
@@ -1080,12 +1085,14 @@ def curate_increment(
     if batch_ids is not None:
         # every checkpoint above executed the observed raw batch; the
         # semi-join runs only when the id ranges overlap, or when Spark
-        # dropped the metrics (see _observed_range)
+        # dropped the metrics (see _observed_range). On overlap only the
+        # base ids inside the batch's range can clash: shards are cut
+        # in doc_id order, so parquet min/max statistics skip the rest
         ids = _observed_range(batch_ids)
-        if ids is None or (
-            ids[0] is not None and ids[0] <= base_range[1] and ids[1] >= base_range[0]
-        ):
+        if ids is None:
             _raise_on_id_clash(batch, base)
+        elif ids[0] is not None and ids[0] <= base_range[1] and ids[1] >= base_range[0]:
+            _raise_on_id_clash(batch, base.filter(F.col("doc_id").between(*ids)))
     # exact dedup vs base: digest anti-join (32-byte keys both sides).
     # The digest MUST be the same key exact_dedup groups on — sha256 of
     # the NORMALIZED text (dedup.py:37) — or a case/whitespace variant
@@ -1120,7 +1127,7 @@ def curate_increment(
     dup_new = ver.select(F.col("id_a").alias("doc_id")).distinct()
     survivors = batch_clean.join(F.broadcast(dup_new), "doc_id", "left_anti")
     if benchmark is not None:
-        survivors = training.bloom_decontaminate(
+        survivors = training.decontaminate_any_size(
             survivors, benchmark, k=3, expected_items=20_000, fpp=0.01
         )
     if cont_conf:
@@ -1231,7 +1238,12 @@ def curate_increment(
             .filter(F.col("shard") > base_max_shard)
             .select("doc_id", "text")
         )
-        batch_min = landed.agg(F.min("doc_id").alias("m")).collect()[0]["m"]
+        # the sink read back every shard this append landed, so their
+        # manifest rows carry the per-shard id range
+        batch_min = min(
+            (s["min_doc_id"] for s in manifest["shards"] if s["shard"] > base_max_shard),
+            default=None,
+        )
         fresh = (
             block is not None
             and int(block.get("ctx_len", -1)) == ctx

@@ -557,7 +557,9 @@ def write_training_shards(
     (one directory per shard — the unit a dataloader maps to one
     worker/epoch slice) plus a ``manifest.json`` recording per-shard
     document and token counts, the totals and the smallest and largest
-    ``doc_id`` (``min_doc_id``, ``max_doc_id``). ``df`` must carry
+    ``doc_id`` (``min_doc_id``, ``max_doc_id``), the smallest also per
+    shard read back (a row carried over from an older manifest keeps
+    the fields it had). ``df`` must carry
     ``doc_id``, ``shard`` and ``n_tok`` (``training.shard_assign``
     output joined back to the payload columns).
 
@@ -620,6 +622,7 @@ def write_training_shards(
             rows[int(r["shard"])] = {
                 "shard": int(r["shard"]), "docs": int(r["docs"]),
                 "tokens": int(r["tokens"]),
+                "min_doc_id": r["lo"],
             }
             lo.append(r["lo"])
             hi.append(r["hi"])

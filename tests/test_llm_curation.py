@@ -9,13 +9,18 @@ import json
 import pytest
 
 # Spark jobs of curate_corpus and curate_increment on the fixture's
-# even/odd halves (test_curate_job_counts_bounded), as measured
-CORPUS_JOBS_MAX = 45
+# even/odd halves (test_curate_job_counts_bounded), as measured; the
+# increment with the src0 documents as its benchmark decontaminates
+# against their fetched shingle set (that increment ran 62 jobs, and
+# the corpus 44, while both always took the Bloom prefilter)
+CORPUS_JOBS_MAX = 39
 INCREMENT_JOBS_MAX = 53
+DECON_INCREMENT_JOBS_MAX = 57
 # a packing increment of 30 documents onto a 60-document base
 # (test_packing_increment_job_count); 63 while the packing and index
-# tables were read with schema inference
-PACKING_INCREMENT_JOBS_MAX = 60
+# tables were read with schema inference, 60 while the batch's
+# smallest id was a Spark aggregate instead of the manifest's
+PACKING_INCREMENT_JOBS_MAX = 58
 
 
 @pytest.fixture(scope="module")
@@ -1053,6 +1058,11 @@ def test_curate_job_counts_bounded(spark, sf_dir, even_base, tmp_path):
     """Job-count regression: a full run and an increment launch Spark
     jobs only for their own work, not to re-learn what the base
     records (49 and 78 here while the increment re-read them)."""
+    import shutil
+
+    import pyspark.sql.functions as F
+
+    from climate_data_pipelines_spark.catalog import load_table
     from climate_data_pipelines_spark.plans.llm_curation import curate_increment
 
     out = _copy_base(even_base, tmp_path)
@@ -1060,6 +1070,14 @@ def test_curate_job_counts_bounded(spark, sf_dir, even_base, tmp_path):
     inc_jobs = _jobs_of(spark, "increment", lambda: curate_increment(spark, batch, out))
     assert even_base[1] <= CORPUS_JOBS_MAX
     assert inc_jobs <= INCREMENT_JOBS_MAX
+
+    out = str(tmp_path / "decon")
+    shutil.copytree(even_base[0], out)
+    bench = load_table(spark, sf_dir, "documents").filter(F.col("source") == "src0")
+    decon_jobs = _jobs_of(
+        spark, "decon-increment", lambda: curate_increment(spark, batch, out, benchmark=bench)
+    )
+    assert decon_jobs <= DECON_INCREMENT_JOBS_MAX
 
 
 def test_packing_increment_job_count(spark, tmp_path):
@@ -1116,6 +1134,58 @@ def test_increment_overlapping_id_ranges_with_distinct_ids_pass(
     assert base["min_doc_id"] < manifest["max_doc_id"]
     assert manifest["total_docs"] > base["total_docs"]
     assert _manifest_rows(manifest) == _manifest_from_read_back(spark, out)
+
+
+def _scan_rows(df):
+    """Rows the parquet scan under ``df.select("doc_id")`` returns: the
+    rows of the row groups its min/max statistics did not skip."""
+    q = df.select("doc_id")
+    q.collect()
+    leaves = q._jdf.queryExecution().executedPlan().collectLeaves()
+    assert leaves.size() == 1
+    return leaves.apply(0).metrics().apply("numOutputRows").value()
+
+
+def test_increment_clash_check_reads_only_base_shards_in_the_batch_range(
+    spark, sf_dir, even_base, tmp_path, monkeypatch
+):
+    """Odd batch ids inside the first base shard's id range: the clash
+    semi-join reads the base ids filtered to the batch's observed
+    range, so parquet statistics skip the other shards and the base
+    scan returns that shard's rows only; a batch whose ids span the
+    whole base range reads every base row."""
+    import shutil
+
+    import pyspark.sql.functions as F
+
+    from climate_data_pipelines_spark.plans import llm_curation
+
+    scanned = []
+    clash = llm_curation._raise_on_id_clash
+
+    def spy(batch, base_ids):
+        scanned.append(_scan_rows(base_ids))
+        clash(batch, base_ids)
+
+    monkeypatch.setattr(llm_curation, "_raise_on_id_clash", spy)
+    out = _copy_base(even_base, tmp_path)
+    with open(f"{out}/manifest.json") as fh:
+        total = json.load(fh)["total_docs"]
+    lo, hi, n = (
+        spark.read.parquet(f"{out}/shards")
+        .filter(F.col("shard") == 0)
+        .agg(F.min("doc_id"), F.max("doc_id"), F.count("*"))
+        .first()
+    )
+    assert n < total
+    batch = _odd_batch(spark, sf_dir).filter(F.col("doc_id").between(lo, hi))
+    llm_curation.curate_increment(spark, batch, out)
+    assert scanned == [n]
+
+    out = str(tmp_path / "whole")
+    shutil.copytree(even_base[0], out)
+    llm_curation.curate_increment(spark, _odd_batch(spark, sf_dir), out)
+    assert scanned == [n, total]
 
 
 def test_increment_without_manifest_id_range_falls_back_to_semi_join(

@@ -498,6 +498,137 @@ def test_bloom_decontaminate_plan_is_jvm_only(spark, sf_dir):
     assert "SortMergeJoin" not in plan, plan
 
 
+# ---------------------------------------------------------------------------
+# decontaminate_any_size: exact under DRIVER_LOCAL_MAX["decon"], Bloom above
+# ---------------------------------------------------------------------------
+
+
+def _train_bench(spark, sf_dir):
+    from climate_data_pipelines_spark.catalog import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    return docs.filter(F.col("source") != "src0"), docs.filter(F.col("source") == "src0")
+
+
+def _kept(df):
+    return {r["doc_id"] for r in df.select("doc_id").collect()}
+
+
+@pytest.fixture
+def bloom_calls(monkeypatch):
+    """Counts the calls decontaminate_any_size makes to the Bloom body."""
+    calls = []
+    bloom = training._bloom_drop
+
+    def spy(*args, **kwargs):
+        calls.append(1)
+        return bloom(*args, **kwargs)
+
+    monkeypatch.setattr(training, "_bloom_drop", spy)
+    return calls
+
+
+def test_decontaminate_any_size_both_branches_keep_exact_ids(
+    spark, sf_dir, monkeypatch, bloom_calls
+):
+    from climate_data_pipelines_spark.operators import scale
+
+    train, bench = _train_bench(spark, sf_dir)
+    exact = _kept(training.decontaminate(train, bench))
+    assert 0 < len(exact) < train.count()  # the fixture is partly contaminated
+    assert _kept(training.decontaminate_any_size(train, bench, expected_items=20_000)) == exact
+    assert not bloom_calls
+    monkeypatch.setitem(scale.DRIVER_LOCAL_MAX, "decon", 0)
+    assert _kept(training.decontaminate_any_size(train, bench, expected_items=20_000)) == exact
+    assert len(bloom_calls) == 1
+
+
+def test_decontaminate_any_size_cap_is_inclusive(spark, sf_dir, monkeypatch, bloom_calls):
+    """A cap equal to the distinct shingle count takes the exact branch,
+    one below it the Bloom branch."""
+    from climate_data_pipelines_spark.operators import scale
+
+    train, bench = _train_bench(spark, sf_dir)
+    n = training._shingle_set(bench, "text", 3).count()
+    monkeypatch.setitem(scale.DRIVER_LOCAL_MAX, "decon", n)
+    training.decontaminate_any_size(train, bench)
+    assert not bloom_calls
+    monkeypatch.setitem(scale.DRIVER_LOCAL_MAX, "decon", n - 1)
+    training.decontaminate_any_size(train, bench)
+    assert len(bloom_calls) == 1
+
+
+def test_decontaminate_any_size_empty_benchmark_keeps_every_doc(spark, sf_dir, bloom_calls):
+    """An empty shingle set is within any cap, so the entry point keeps
+    every doc without the Bloom body; the Bloom path keeps every doc
+    against an empty benchmark too."""
+    train, bench = _train_bench(spark, sf_dir)
+    empty = bench.filter(F.lit(False))
+    assert _kept(training.decontaminate_any_size(train, empty)) == _kept(train)
+    assert not bloom_calls
+    assert _kept(training.bloom_decontaminate(train, empty)) == _kept(train)
+
+
+@pytest.mark.parametrize("cap", [None, 0])
+def test_decontaminate_any_size_null_text_neither_fails_nor_drops(
+    spark, sf_dir, monkeypatch, bloom_calls, cap
+):
+    """A null text has no shingles: a null-text train doc is kept, a
+    null-text benchmark doc flags nothing."""
+    from climate_data_pipelines_spark.operators import scale
+
+    if cap is not None:
+        monkeypatch.setitem(scale.DRIVER_LOCAL_MAX, "decon", cap)
+    train, bench = _train_bench(spark, sf_dir)
+    null_doc = train.limit(1).withColumn("text", F.lit(None).cast("string"))
+    train = train.unionByName(null_doc.withColumn("doc_id", F.lit(10**9).cast("bigint")))
+    bench = bench.unionByName(null_doc)
+    got = _kept(training.decontaminate_any_size(train, bench))
+    assert len(bloom_calls) == (cap is not None)
+    assert 10**9 in got
+    assert got == _kept(training.decontaminate(train, bench))
+
+
+def test_decontaminate_any_size_bloom_branch_reads_the_probed_set(spark, sf_dir, monkeypatch):
+    """Above the cap the Bloom body reads the shingle set the size probe
+    materialized: the benchmark is not exploded again (the lazy
+    ``bloom_decontaminate`` explodes it once per use, four times)."""
+    from climate_data_pipelines_spark.operators import scale
+
+    monkeypatch.setitem(scale.DRIVER_LOCAL_MAX, "decon", 0)
+    train, bench = _train_bench(spark, sf_dir)
+
+    def plan(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    got = plan(training.decontaminate_any_size(train, bench, expected_items=20_000))
+    lazy = plan(training.bloom_decontaminate(train, bench, expected_items=20_000))
+    assert (got.count("Generate explode"), got.count("LogicalRDD")) == (1, 4), got
+    assert (lazy.count("Generate explode"), lazy.count("LogicalRDD")) == (5, 0), lazy
+
+
+def test_decontaminate_any_size_exact_plan_is_broadcast_and_jvm_only(spark, sf_dir):
+    """Under the cap both joins are broadcast by hint, not by the size
+    estimate: with automatic broadcasts off there is still no shuffle
+    join, and no Python evaluation."""
+    train, bench = _train_bench(spark, sf_dir)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        plan = (
+            training.decontaminate_any_size(train, bench)
+            ._jdf.queryExecution()
+            .executedPlan()
+            .toString()
+        )
+    finally:
+        spark.conf.set(key, old)
+    assert "SortMergeJoin" not in plan, plan
+    assert plan.count("BroadcastHashJoin") == 2, plan
+    assert "EvalPython" not in plan and "InPandas" not in plan
+
+
 def test_domain_cap_respects_cap_and_shrink_stability(spark, sf_dir):
     from climate_data_pipelines_spark.catalog import load_table
     from climate_data_pipelines_spark.operators import training
