@@ -23,7 +23,7 @@ from climate_data_pipelines_spark.functions.scalar import oracle_round
 from climate_data_pipelines_spark.functions.text import normalize_text, shingles, tokens
 from climate_data_pipelines_spark.operators.scale import (
     CPU_CHUNK_BYTES,
-    fetch_if_small,
+    fetch_at_most,
     localcheckpoint_capped,
     spread_for_cpu,
     unpersist_checkpoint,
@@ -426,7 +426,9 @@ def jaccard_on_pairs(
 ) -> DataFrame:
     """Exact n-gram Jaccard for an EXPLICIT candidate pair list — the
     verification stage that runs after LSH banding: per-pair cost, never
-    all-pairs. ``pairs`` has (id_a, id_b); returns (id_a, id_b, jaccard).
+    all-pairs. ``pairs`` has (id_a, id_b) and may carry further
+    columns (a flag), which pass through; returns the pair columns
+    plus ``jaccard``.
 
     Plan: per-doc shingle-SET table (semi-joined down to pair
     endpoints, so only candidate documents are ever shingled — at 100
@@ -483,8 +485,7 @@ def jaccard_on_pairs(
         pairs.join(sa, "id_a", "left")
         .join(sb, "id_b", "left")
         .select(
-            "id_a",
-            "id_b",
+            *pairs.columns,
             F.when(union > 0, n_common / union).otherwise(F.lit(0.0)).alias(
                 "jaccard"
             ),
@@ -882,23 +883,13 @@ def dedup_rows(df: DataFrame, key_cols: list[str]) -> DataFrame:
     return kept.select(*key_cols, *[F.col(f"_rest.{c}").alias(c) for c in others])
 
 
-def _cc_driver_local(
-    pdf, id_type, spark, nodes: DataFrame | None, node_col: str
-) -> DataFrame:
-    """Exact driver-side union-find over the fetched symmetric
-    (src, dst) rows of a SMALL graph (at most
-    ``scale.DRIVER_LOCAL_MAX["cc"]``). The iterative min-label loop
-    costs 2 checkpoint jobs + 1 Observation action per round — ~5
-    serial sub-second stages even on a 253-pair candidate graph — for
-    an answer (min member id per component, exact integer arithmetic)
-    that one Arrow fetch of the pairs determines: labels are IDENTICAL
-    to the converged propagation's, with no floating point anywhere.
-    They ship back via Arrow ``createDataFrame``; singletons attach by
-    the distributed path's anti-join, against the (small, broadcast)
-    endpoint set. An empty edge table leaves only singletons."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
+def _component_min(src: list, dst: list) -> dict:
+    """``{node: min node id of its component}`` over the endpoints of
+    the edge lists, by driver-side union-find with path compression:
+    exact for any orderable id type, no floating point anywhere, and
+    the same min-id labels the converged distributed propagation
+    gives. The one union-find core of ``connected_components`` and
+    ``component_drop_ids``."""
     parent: dict = {}
 
     def find(x):
@@ -909,7 +900,7 @@ def _cc_driver_local(
             parent[x], x = r, parent[x]
         return r
 
-    for s, d in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
+    for s, d in zip(src, dst):
         if s not in parent:
             parent[s] = s
         if d not in parent:
@@ -922,26 +913,49 @@ def _cc_driver_local(
         r = find(n)
         if r not in comp_min or n < comp_min[r]:
             comp_min[r] = n
-    rows = sorted((n, comp_min[find(n)]) for n in parent)
-    schema = T.StructType(
-        [T.StructField(node_col, id_type), T.StructField("component", id_type)]
+    return {n: comp_min[find(n)] for n in parent}
+
+
+def _local_frame(spark, cols: dict, schema) -> DataFrame:
+    """A driver-built frame as a local relation: Arrow rows when there
+    are any, else an empty ``LocalRelation`` (``limit(0)``), which the
+    optimizer prunes from a union or an anti-join, where an empty
+    created frame is a Python RDD scan."""
+    import pandas as pd
+
+    if any(len(v) for v in cols.values()):
+        return spark.createDataFrame(pd.DataFrame(cols), schema)
+    return spark.createDataFrame([], schema).limit(0)
+
+
+def _with_singletons(
+    labels: DataFrame, nodes: DataFrame | None, node_col: str, small: bool
+) -> DataFrame:
+    """``labels`` plus every id of ``nodes`` on no edge, as its own
+    component: one anti-join against the labelled endpoints (broadcast
+    when the labels are driver-built) and a union, after the labels
+    are final, so no round carries corpus-sized singleton rows."""
+    if nodes is None:
+        return labels
+    endpoints = labels.select(node_col)
+    singletons = (
+        nodes.select(F.col(nodes.columns[0]).alias(node_col))
+        .distinct()
+        .join(F.broadcast(endpoints) if small else endpoints, node_col, "left_anti")
+        .select(F.col(node_col), F.col(node_col).alias("component"))
     )
-    labels = spark.createDataFrame(
-        pd.DataFrame(rows, columns=[node_col, "component"]) if rows else [], schema
+    return labels.unionByName(singletons)
+
+
+def _fetch_pairs(edges: DataFrame, id_a: str, id_b: str, *extra: str):
+    """The verified edges, one row per pair as given, sized and fetched
+    under ``DRIVER_LOCAL_MAX["cc"]`` (``scale.fetch_at_most``):
+    ``(pdf, None)`` at or under the cap, ``(None, ckpt)`` of
+    ``(src, dst, *extra)`` above it. Returns the id type too."""
+    pairs = edges.select(
+        F.col(id_a).alias("src"), F.col(id_b).alias("dst"), *extra
     )
-    if not rows:
-        # an empty LocalRelation, pruned from the union and anti-join
-        # below, where an empty created frame is a Python RDD scan
-        labels = labels.limit(0)
-    if nodes is not None:
-        singletons = (
-            nodes.select(F.col(nodes.columns[0]).alias(node_col))
-            .distinct()
-            .join(F.broadcast(labels.select(node_col)), node_col, "left_anti")
-            .select(F.col(node_col), F.col(node_col).alias("component"))
-        )
-        labels = labels.unionByName(singletons)
-    return labels
+    return pairs.schema["src"].dataType, *fetch_at_most(pairs, "cc")
 
 
 def connected_components(
@@ -1020,11 +1034,42 @@ def connected_components(
     handful of rounds — hitting the bound means the input is not the
     shallow cluster graph this is designed for.
 
-    At or under ``scale.DRIVER_LOCAL_MAX["cc"]`` symmetric edge rows
-    the exact driver-side union-find (``_cc_driver_local``) answers
-    from one Arrow fetch instead of serial propagation rounds —
-    identical min-id labels, bounded driver state.
+    At or under ``scale.DRIVER_LOCAL_MAX["cc"]`` edge rows (one row
+    per pair as given, fetched by ``scale.fetch_at_most``) the exact
+    driver-side union-find (``_component_min``) answers from that one
+    Arrow fetch instead of serial propagation rounds — identical
+    min-id labels, bounded driver state. Above it the rounds read the
+    materialized edge rows, freed once the labels converge.
     """
+    id_type, pdf, pairs = _fetch_pairs(edges, id_a, id_b)
+    if pdf is not None:
+        from pyspark.sql import types as T
+
+        rows = sorted(
+            _component_min(pdf["src"].tolist(), pdf["dst"].tolist()).items()
+        )
+        labels = _local_frame(
+            edges.sparkSession,
+            {node_col: [n for n, _ in rows], "component": [c for _, c in rows]},
+            T.StructType(
+                [T.StructField(node_col, id_type), T.StructField("component", id_type)]
+            ),
+        )
+        return _with_singletons(labels, nodes, node_col, small=True)
+    labels = _cc_distributed(pairs, node_col, max_iter, steps_per_checkpoint)
+    # nothing in the returned plan reads the edge rows: free them now
+    # instead of pinning an edge-table-sized block for the session
+    unpersist_checkpoint(pairs)
+    return _with_singletons(labels, nodes, node_col, small=False)
+
+
+def _cc_distributed(
+    pairs: DataFrame, node_col: str, max_iter: int = 20, steps_per_checkpoint: int = 2
+) -> DataFrame:
+    """``connected_components``' min-label propagation over the
+    materialized ``(src, dst)`` edge rows: returns the converged
+    ``(node_col, component)`` labels of the endpoints, checkpointed.
+    The caller frees ``pairs`` once nothing it returns reads them."""
     from pyspark.sql import Observation
 
     def _sum_metric():
@@ -1035,15 +1080,9 @@ def connected_components(
         # scan+agg job — measured to fire on eager localCheckpoint).
         return F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
 
-    sym = edges.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")).unionByName(
-        edges.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
+    sym = pairs.select("src", "dst").unionByName(
+        pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    # a small graph, the empty one included, goes to the driver
-    id_type = sym.schema["src"].dataType
-    pdf, sym = fetch_if_small(sym, "cc")
-    if pdf is not None:
-        return _cc_driver_local(pdf, id_type, edges.sparkSession, nodes, node_col)
-    base = sym.select(F.col("src").alias(node_col)).distinct()
     # round 0 folded into initialization: component = least(node,
     # min neighbor) via ONE groupBy over the symmetric edge table —
     # the same result the generic step would produce from identity
@@ -1121,25 +1160,64 @@ def connected_components(
             f"connected_components did not converge in {max_iter} iterations "
             "(labels still changing); raise max_iter"
         )
-    if nodes is not None:
-        # attach isolated nodes as singletons: one anti-join against the
-        # endpoint set + union — outside the iteration, so the loop cost
-        # stays proportional to the candidate subgraph, not the corpus
-        singletons = (
-            nodes.select(F.col(nodes.columns[0]).alias(node_col))
-            .distinct()
-            .join(base, node_col, "left_anti")
-            .select(F.col(node_col), F.col(node_col).alias("component"))
-        )
-        labels = labels.unionByName(singletons)
-    else:
-        # no singleton attachment → nothing in the returned plan
-        # references the symmetric edge table; free its checkpoint
-        # now instead of pinning an edge-table-sized block for the
-        # session (with `nodes`, base = distinct(sym) stays
-        # reachable from the returned plan and must persist)
-        unpersist_checkpoint(sym)
     return labels
+
+
+def component_drop_ids(
+    edges: DataFrame,
+    id_a: str = "id_a",
+    id_b: str = "id_b",
+    node_col: str = "node",
+    cross_col: str | None = None,
+) -> DataFrame:
+    """The drop set of keep-the-min-id-per-component dedup: every
+    endpoint of ``edges`` that is not its connected component's min
+    id, one ``node_col`` column (an id may repeat). A caller keeps its
+    rows by one ``left_anti`` join against it, so ids on no edge need
+    no singleton rows and no keeper join.
+
+    ``cross_col`` names an optional boolean column marking one-sided
+    edges, whose ``id_b`` is outside the frame being deduped (an
+    increment's batch doc against a base doc): their ``id_a`` is
+    dropped outright and they join no component.
+
+    The edges are fetched once (``scale.fetch_at_most`` under
+    ``DRIVER_LOCAL_MAX["cc"]``). At or under the cap the union-find
+    core (``_component_min``) answers on the driver and the set comes
+    back as a broadcast-hinted local frame: at most two ids per
+    fetched edge, so bounded by the cap. Above it the distributed
+    propagation's labels give the same set, ``node != component``,
+    without a hint: that set grows with the candidate graph."""
+    from pyspark.sql import types as T
+
+    id_type, pdf, pairs = _fetch_pairs(
+        edges, id_a, id_b, *([cross_col] if cross_col else [])
+    )
+    if pdf is not None:
+        one_sided = []
+        if cross_col:
+            cross = pdf[cross_col].astype(bool)
+            pdf, one_sided = pdf[~cross], pdf["src"][cross].tolist()
+        comp = _component_min(pdf["src"].tolist(), pdf["dst"].tolist())
+        drop = {n for n, c in comp.items() if n != c}.union(one_sided)
+        return F.broadcast(
+            _local_frame(
+                edges.sparkSession,
+                {node_col: sorted(drop)},
+                T.StructType([T.StructField(node_col, id_type)]),
+            )
+        )
+    within = pairs.filter(~F.col(cross_col)) if cross_col else pairs
+    labels = _cc_distributed(within, node_col)
+    drop = labels.filter(F.col(node_col) != F.col("component")).select(node_col)
+    if cross_col is None:
+        unpersist_checkpoint(pairs)
+        return drop
+    # the one-sided ids read the edge rows lazily: their blocks are
+    # freed once the returned frame is no longer referenced
+    return drop.unionByName(
+        pairs.filter(F.col(cross_col)).select(F.col("src").alias(node_col))
+    )
 
 
 def exact_dedup_best(

@@ -139,10 +139,11 @@ def localcheckpoint_capped(df: DataFrame) -> tuple[DataFrame, DataFrame]:
 # the driver from one Arrow fetch; above it the distributed loop runs.
 # Read at call time, so a test can force either branch.
 DRIVER_LOCAL_MAX: dict[str, int] = {
-    # connected components: symmetric edge rows. 200k rows = 100k
-    # pairs, ~20 MB of union-find state, the bounded-collect budget a
-    # broadcast join gets; a 100 TB candidate graph exceeds it
-    "cc": 200_000,
+    # connected components: verified edges as fetched, one row per
+    # (id_a, id_b) pair in one direction. 100k pairs, ~20 MB of
+    # union-find state, the bounded-collect budget a broadcast join
+    # gets; a 100 TB candidate graph exceeds it
+    "cc": 100_000,
     # BPE training: distinct vocabulary words, the (word, count) table
     # plus its symbol lists at the CC budget's scale; a production
     # vocabulary exceeds it
@@ -162,27 +163,10 @@ DRIVER_LOCAL_MAX: dict[str, int] = {
 }
 
 
-def fetch_if_small(df: DataFrame, kind: str):
-    """Materialize ``df`` once and choose the branch for it under
-    ``DRIVER_LOCAL_MAX[kind]``.
-
-    A lazy ``localCheckpoint`` is materialized by the one ``count()``
-    that also sizes it: one job where an eager checkpoint followed by
-    a count ran two. At or under the cap this returns ``(pdf, None)``,
-    the Arrow fetch, and frees the checkpoint. Above it, it returns
-    ``(None, ckpt)``, the materialized frame; the distributed loop
-    frees it with ``unpersist_checkpoint`` once nothing reads it."""
-    ck = df.localCheckpoint(eager=False)
-    if ck.count() <= DRIVER_LOCAL_MAX[kind]:
-        pdf = ck.toPandas()
-        unpersist_checkpoint(ck)
-        return pdf, None
-    return None, ck
-
-
 def fetch_at_most(df: DataFrame, kind: str):
-    """``fetch_if_small`` without the count: materialize ``df`` once
-    and choose the branch for it under ``DRIVER_LOCAL_MAX[kind]``.
+    """Materialize ``df`` once and choose the branch for it under
+    ``DRIVER_LOCAL_MAX[kind]``, the one driver-fetch rule of the
+    dual-path operators.
 
     One Arrow collect of ``limit(cap + 1)`` over a lazy
     ``localCheckpoint`` both sizes the frame and fetches it: the

@@ -20,7 +20,7 @@ from climate_data_pipelines_spark.functions.text import (
 )
 from climate_data_pipelines_spark.operators.scale import (
     CPU_CHUNK_BYTES,
-    fetch_if_small,
+    fetch_at_most,
     local_df,
     spread_for_cpu,
     unpersist_checkpoint,
@@ -785,7 +785,7 @@ def _bpe_train_local(
 ) -> list:
     """The EXACT driver-side replay of ``bpe_train``'s merge loop over
     a collected (word, count) vocabulary — the CC-driver-local pattern
-    (dedup._cc_driver_local): classic BPE is a single-machine
+    (dedup._component_min): classic BPE is a single-machine
     algorithm over the vocabulary-sized frequency dict, so under the
     collect cap the per-round Spark jobs (4 serial driver round-trips
     at q164's 24-merge/8-batch shape) collapse into one Arrow fetch.
@@ -921,8 +921,9 @@ def bpe_train(
     """
     spark = df.sparkSession
     # ONE corpus pass builds the vocabulary-sized (word, count) table;
-    # its count() both materializes it and sizes it for the dispatch
-    pdf, wc = fetch_if_small(
+    # the capped fetch both materializes it and sizes it for the
+    # dispatch
+    pdf, wc = fetch_at_most(
         df.select(F.explode(tokens(text_col)).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("w_count")),

@@ -11,10 +11,14 @@ materialization points the algorithms require:
   2. EXACT dedup         — content-digest agg, keep min id (one 32-byte
                            key exchange)
   3. NEAR-dup dedup      — MinHash signatures → banded LSH candidates →
-                           exact Jaccard verify → connected components →
-                           keep min id per cluster (candidates
-                           checkpointed once; CC iterates on the
-                           candidate subgraph only)
+                           exact Jaccard verify → one fetch of the
+                           verified edges → union-find on the driver
+                           (distributed CC above the driver budget) →
+                           the drop set, every id that is not its
+                           cluster's min id → one broadcast anti-join
+                           (candidates checkpointed once; the day-N
+                           increment runs its within-batch and
+                           batch × base candidates as one such pass)
   4. DECONTAMINATION     — 3-shingle overlap vs the held-out benchmark
                            corpus: exact against its fetched shingle
                            set under the driver budget, Bloom-
@@ -62,31 +66,28 @@ def neardup_dedup(
 ) -> DataFrame:
     """Verified near-dup dedup, keep the min id per cluster (the q122
     pipeline step packaged): signatures → banded candidates → exact
-    Jaccard verify on candidate pairs only → connected components →
-    left-semi keep of the cluster representatives. ``sigs`` are
-    ``df``'s MinHash signatures (``dedup.minhash_signatures`` with
+    Jaccard verify on candidate pairs only → one fetch of the verified
+    edges → the drop set (``dedup.component_drop_ids``: every endpoint
+    that is not its cluster's min id) → one ``left_anti`` join, with a
+    broadcast of the drop set under the driver budget. Rows with a
+    null ``id_col`` are dropped, as no cluster can keep them. ``sigs``
+    are ``df``'s MinHash signatures (``dedup.minhash_signatures`` with
     k=3, MINHASH_N hashes), computed once by the caller, which reads
     them again for its other consumers."""
     from climate_data_pipelines_spark.operators.scale import unpersist_checkpoint
 
+    # checkpointed once: the verify reads the candidates twice
     cand = dedup.minhash_lsh_candidates(
         sigs, n_hashes=MINHASH_N, bands=MINHASH_BANDS
     ).localCheckpoint(eager=True)
-    ver = (
-        dedup.jaccard_on_pairs(df, cand, k=3)
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b")
+    ver = dedup.jaccard_on_pairs(df, cand, k=3).filter(
+        F.col("jaccard") >= jaccard_threshold
     )
-    clusters = dedup.connected_components(
-        ver, nodes=df.select(id_col), node_col=id_col
-    )
-    # connected_components has materialized its own edge + label
-    # checkpoints by the time it returns, so the candidate frame is
-    # dead — free it instead of pinning it for the session
-    # (r6 second-review finding; same rule as bpe_train's final table)
+    drop = dedup.component_drop_ids(ver, node_col=id_col)
+    # the fetch has materialized the verified edges: nothing reads
+    # the candidates any more
     unpersist_checkpoint(cand)
-    keepers = clusters.filter(F.col(id_col) == F.col("component")).select(id_col)
-    return df.join(keepers, id_col, "left_semi")
+    return df.filter(F.col(id_col).isNotNull()).join(drop, id_col, "left_anti")
 
 
 def url_dedup_keep(
@@ -285,30 +286,18 @@ def _rewrite_manifest(out_dir: str, manifest: dict) -> None:
         _json.dump(manifest, fh, indent=1)
 
 
-def _packing_actual_total(spark: SparkSession, out_dir: str, ctx_len: int) -> int:
-    """Ground truth for the packing staleness probe: the global token
-    stream's end offset, recomputed from the pieces table itself —
-    every piece's end is ``seq*ctx_len + seq_offset + n_tok_piece``,
-    and the max over the table IS the total token count. One agg over
-    5-long-column rows; returns -1 when the table is absent (never
-    packed / wiped), which never equals a recorded total."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        row = (
-            sinks.read_parquet(spark, f"{out_dir}/packing/pieces")
-            .agg(
-                F.max(
-                    F.col("seq") * ctx_len
-                    + F.col("seq_offset")
-                    + F.col("n_tok_piece")
-                ).alias("t")
-            )
-            .collect()[0]
-        )
-    except AnalysisException:
-        return -1
-    return int(row["t"] or 0)
+def _packing_block_current(out_dir: str, block: dict, base_manifest: dict) -> bool:
+    """The packing staleness probe, from recorded facts (no job): the
+    block is current when it counts the tokens of the shards the base
+    manifest lists (packing counts the same whitespace tokens as the
+    shard sink) and the pieces table holds exactly the ``n_pieces``
+    rows it records, summed from the parquet footers. The pieces
+    append runs before the manifest rewrite, so a crash between the
+    two leaves more rows than the block records; an absent table
+    reads -1, which never equals a recorded count."""
+    return int(block["total_tokens"]) == int(
+        base_manifest["total_tokens"]
+    ) and sinks.parquet_rows(f"{out_dir}/packing/pieces") == int(block["n_pieces"])
 
 
 def _write_packing(
@@ -881,13 +870,21 @@ def curate_increment(
          digests read from the PERSISTED dedup index (written at
          ``curate_corpus`` time; 32-byte keys, the base text is
          never re-read or re-hashed);
-      3. near-dup WITHIN the batch (``neardup_dedup``);
-      4. CROSS-corpus near-dup vs the base:
-         ``minhash_lsh_candidates_cross`` over the index's
+      3. near-dup candidates, one table: WITHIN the batch
+         (``minhash_lsh_candidates``) and batch × base
+         (``minhash_lsh_candidates_cross`` over the index's
          precomputed base signatures — the base is never re-hashed
-         or self-paired, only (new × base) buckets join — then exact
-         Jaccard verify (base text joins only for surviving
-         candidate pairs), dropping the NEW member of each pair;
+         or self-paired, only (new × base) buckets join), flagged
+         ``cross`` and checkpointed once;
+      4. one exact Jaccard verify over batch ∪ base (base text joins
+         only for candidate endpoints) and one fetch of the verified
+         edges (``dedup.component_drop_ids``). The drop set is every
+         batch doc that is not the min id of its within-batch
+         cluster, plus the NEW member of every verified cross edge;
+         the batch keeps the rest by one anti-join. These are the
+         ids of a within-batch pass followed by a cross pass over
+         its keepers: whether a doc has a near-dup in the base does
+         not depend on which batch docs are kept;
       5. optional benchmark decontamination (pass the eval frame);
       6. shard assignment continuing the numbering AFTER the base's
          last shard; parquet append, then a manifest covering base +
@@ -1105,27 +1102,42 @@ def curate_increment(
     fresh = unique.withColumn("_d", digest).join(
         base_digests, "_d", "left_anti"
     ).drop("_d")
-    # the batch's MinHash signatures, once: within-batch near-dup, the
-    # cross-corpus LSH (batch_clean's rows) and the index append
-    # (landed rows) all read this frame
+    # the batch's MinHash signatures, once: the candidate pass and the
+    # index append (landed rows) both read this frame
     sigs = dedup.minhash_signatures(
         fresh, k=3, n_hashes=MINHASH_N
     ).localCheckpoint(eager=True)
-    batch_clean = neardup_dedup(fresh, sigs, jaccard_threshold)
-
+    # near-dup, one pass: the within-batch candidates and the batch ×
+    # base candidates (the base's persisted signatures, never
+    # re-hashed or self-paired) in one table flagged `cross`, one
+    # exact verify over fresh ∪ base (base text joins only for
+    # candidate endpoints) and one fetch of the verified edges. The
+    # drop set is the batch's within-batch non-keepers plus the batch
+    # member of every verified cross edge: the same ids as verifying
+    # the cross edges only for the within-batch keepers, since a
+    # doc's cross edges do not depend on which batch docs are kept
     sb = spark.read.schema(sigs.schema).parquet(f"{index_dir}/signatures")
-    sn = sigs.join(batch_clean.select("doc_id"), "doc_id", "left_semi")
-    cand = dedup.minhash_lsh_candidates_cross(
-        sn, sb, n_hashes=MINHASH_N, bands=MINHASH_BANDS
-    ).localCheckpoint(eager=True)
-    both = batch_clean.select("doc_id", "text").unionByName(
-        base.select("doc_id", "text")
+    cand = (
+        dedup.minhash_lsh_candidates(sigs, n_hashes=MINHASH_N, bands=MINHASH_BANDS)
+        .withColumn("cross", F.lit(False))
+        .unionByName(
+            dedup.minhash_lsh_candidates_cross(
+                sigs, sb, n_hashes=MINHASH_N, bands=MINHASH_BANDS
+            ).withColumn("cross", F.lit(True))
+        )
+        .localCheckpoint(eager=True)
     )
+    both = fresh.select("doc_id", "text").unionByName(base.select("doc_id", "text"))
     ver = dedup.jaccard_on_pairs(both, cand, k=3).filter(
         F.col("jaccard") >= jaccard_threshold
     )
-    dup_new = ver.select(F.col("id_a").alias("doc_id")).distinct()
-    survivors = batch_clean.join(F.broadcast(dup_new), "doc_id", "left_anti")
+    drop = dedup.component_drop_ids(ver, node_col="doc_id", cross_col="cross")
+    # the fetch has materialized the verified edges: nothing reads
+    # the candidates any more
+    unpersist_checkpoint(cand)
+    survivors = fresh.filter(F.col("doc_id").isNotNull()).join(
+        drop, "doc_id", "left_anti"
+    )
     if benchmark is not None:
         survivors = training.decontaminate_any_size(
             survivors, benchmark, k=3, expected_items=20_000, fpp=0.01
@@ -1172,11 +1184,6 @@ def curate_increment(
         survivors = survivors.join(F.broadcast(contained), "doc_id", "left_anti")
         unpersist_checkpoint(batch_sets)
     survivors = survivors.localCheckpoint(eager=True)
-    # cand is only safe to free AFTER survivors has materialized — the
-    # lazy verify stage reads its blocks (unlike neardup_dedup, where
-    # connected_components checkpoints everything first; freeing it
-    # earlier raised checkpointRDDBlockIdNotFound in the e2e test)
-    unpersist_checkpoint(cand)
     if gate_ckpt is not None:
         unpersist_checkpoint(gate_ckpt)
 
@@ -1210,11 +1217,11 @@ def curate_increment(
     # joins against today's appends too; a crash before this append
     # leaves a stale index the next increment detects and rebuilds.
     # The rows come from the survivors checkpoint, not `out`: the same
-    # ids (the shard join drops only null ids), without re-running
+    # ids (near-dup dedup dropped the null ids), without re-running
     # the shard-assignment plan
     index_cols = ["doc_id", "text"] + ([url_conf["url_col"]] if url_conf else [])
     _write_dedup_index(
-        survivors.filter(F.col("doc_id").isNotNull()).select(*index_cols),
+        survivors.select(*index_cols),
         base_dir,
         mode="append",
         url_col=url_conf["url_col"] if url_conf else None,
@@ -1226,11 +1233,10 @@ def curate_increment(
         # manifest-driven packing continuation (r13): the batch's
         # token spans continue the global stream from the recorded
         # total — O(batch). Falls back to a full repack (self-heal,
-        # same stance as the dedup-index probe) when the recorded
-        # block is missing/stale (crash between the pieces append and
-        # the manifest rewrite — detected by recomputing the stream
-        # end from the pieces table), the ctx_len changed, or the
-        # batch ids do not sort after the base ids.
+        # same stance as the dedup-index probe) when the base manifest
+        # is not current, the recorded block is missing or stale (see
+        # _packing_block_current), the ctx_len changed, or the batch
+        # ids do not sort after the base ids.
         ctx = int(pack_conf["ctx_len"])
         block = base_manifest.get("packing")
         landed = (
@@ -1244,14 +1250,14 @@ def curate_increment(
             (s["min_doc_id"] for s in manifest["shards"] if s["shard"] > base_max_shard),
             default=None,
         )
-        fresh = (
-            block is not None
+        continues = (
+            current
+            and block is not None
             and int(block.get("ctx_len", -1)) == ctx
-            and _packing_actual_total(spark, base_dir, ctx)
-            == int(block["total_tokens"])
+            and _packing_block_current(base_dir, block, base_manifest)
             and (batch_min is None or batch_min > base_max_doc_id)
         )
-        if fresh:
+        if continues:
             manifest["packing"] = _write_packing(
                 spark, base_dir, landed, ctx, base_block=block
             )

@@ -30,17 +30,6 @@ def write_parquet_partitioned(
     df.write.partitionBy(*partition_cols).mode(mode).parquet(path)
 
 
-def write_csv_partitioned(
-    df: DataFrame, path: str, partition_cols: list[str] | None = None, mode: str = "overwrite"
-) -> None:
-    """K1: CSV sink with header, optionally partitioned (the
-    reference's full-dump + per-month split in one write)."""
-    w = df.write.option("header", True).mode(mode)
-    if partition_cols:
-        w = w.partitionBy(*partition_cols)
-    w.csv(path)
-
-
 def write_geojson_per_group(fc: DataFrame, path: str, mode: str = "overwrite") -> None:
     """K2: one FeatureCollection JSON document per group row.
 

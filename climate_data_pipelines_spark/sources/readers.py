@@ -23,32 +23,6 @@ def read_csv(spark: SparkSession, path: str, schema: T.StructType, header: bool 
     return spark.read.schema(schema).option("header", header).csv(path)
 
 
-def read_json_documents(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
-    """S6: multi-line JSON document scan (the countries.geojson shape:
-    one top-level object; explode(features) downstream)."""
-    return spark.read.schema(schema).option("multiLine", True).json(path)
-
-
-def read_binary_files(spark: SparkSession, path: str, glob: str | None = None) -> DataFrame:
-    """Multimodal ingest: opaque payloads via the binaryFile source →
-    (path, modificationTime, length, content BINARY). Feeds
-    operators.multimodal (SURVEY.md §2.11)."""
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    return reader.load(path)
-
-
-def explode_geojson_features(raw: DataFrame) -> DataFrame:
-    """S6 downstream: FeatureCollection document → one row per feature
-    (population_pipeline.py:57-59's feature loop, relationally)."""
-    return raw.select(F.explode("features").alias("feature")).select(
-        F.col("feature.type").alias("type"),
-        F.col("feature.geometry").alias("geometry"),
-        F.col("feature.properties").alias("properties"),
-    )
-
-
 def melt_cube(
     cube: DataFrame,
     time_col: str = "time",

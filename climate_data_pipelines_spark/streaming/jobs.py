@@ -73,26 +73,6 @@ def tumbling_counts(stream: DataFrame, window: str = "1 day", watermark: str = "
     )
 
 
-def sliding_counts(
-    stream: DataFrame,
-    window: str = "6 hours",
-    slide: str = "3 hours",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Sliding-window variant (engine-added; SURVEY.md §2.10)."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("w"), "event_type")
-        .agg(F.count("*").alias("n"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "n",
-        )
-    )
-
-
 def session_counts(
     stream: DataFrame, gap: str = "30 minutes", watermark: str = "1 hour"
 ) -> DataFrame:

@@ -150,10 +150,10 @@ def test_connected_components_local_vs_distributed_parity(spark, monkeypatch):
     assert dict(local)[42] == 40
 
 
-def test_connected_components_local_build_runs_at_most_three_jobs(spark):
-    # the edge table's lazy checkpoint is materialized by the count
-    # that sizes it (scale.fetch_if_small): no separate eager
-    # checkpoint job ahead of the count and the Arrow fetch
+def test_connected_components_local_build_runs_at_most_one_job(spark):
+    # the edge rows' lazy checkpoint is materialized by the capped
+    # Arrow collect that sizes and fetches them (scale.fetch_at_most):
+    # one job, where a count ahead of the fetch ran three
     sc = spark.sparkContext
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 11)], "id_a long, id_b long"
@@ -164,8 +164,60 @@ def test_connected_components_local_build_runs_at_most_three_jobs(spark):
         labels = dedup.connected_components(edges)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(list(sc.statusTracker().getJobIdsForGroup(group))) <= 3
+    assert len(list(sc.statusTracker().getJobIdsForGroup(group))) <= 1
     assert {r.component for r in labels.collect()} == {1}
+
+
+def _drop_ids(edges, **kw):
+    return sorted(r[0] for r in dedup.component_drop_ids(edges, **kw).collect())
+
+
+def test_component_drop_ids_both_branches(spark, monkeypatch):
+    # the drop set is every endpoint that is not its component's min
+    # id, the same on the driver-local and the distributed branch:
+    # chains, merges, duplicate and reversed edges
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 8)]
+        + [(11, 12), (12, 11), (11, 12), (40, 41), (42, 41), (40, 42)],
+        "id_a long, id_b long",
+    )
+    expected = list(range(2, 9)) + [12, 41, 42]
+    labels = dedup.connected_components(edges).collect()
+    assert sorted(r.node for r in labels if r.node != r.component) == expected
+    assert _drop_ids(edges) == expected
+    monkeypatch.setitem(scale.DRIVER_LOCAL_MAX, "cc", 0)
+    assert _drop_ids(edges) == expected
+
+
+def test_component_drop_ids_cross_edges_drop_their_id_a_only(spark, monkeypatch):
+    # a cross edge drops its id_a outright and joins no component: were
+    # (2, 0) a component edge, 0 would be the min and 1 would drop too
+    edges = spark.createDataFrame(
+        [(1, 2, False), (2, 3, False), (2, 0, True), (5, 101, True), (5, 102, True)],
+        "id_a long, id_b long, cross boolean",
+    )
+    for cap in (scale.DRIVER_LOCAL_MAX["cc"], 0):
+        monkeypatch.setitem(scale.DRIVER_LOCAL_MAX, "cc", cap)
+        assert sorted(set(_drop_ids(edges, cross_col="cross"))) == [2, 3, 5]
+
+
+def test_component_drop_ids_under_the_cap_is_a_broadcast_local_frame(spark):
+    # under the cap the set is built on the driver: the anti-join
+    # broadcasts it with automatic broadcasts off, and an empty edge
+    # table gives an empty set the optimizer prunes
+    edges = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
+    docs = spark.createDataFrame([(i,) for i in range(1, 6)], "node long")
+    saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        kept = docs.join(dedup.component_drop_ids(edges), "node", "left_anti")
+        plan = kept._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
+        assert sorted(r.node for r in kept.collect()) == [1, 4, 5]
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    none = dedup.component_drop_ids(edges.limit(0))
+    assert docs.join(none, "node", "left_anti").count() == 5
 
 
 def test_connected_components_transitive_merge(spark):

@@ -12,15 +12,18 @@ import pytest
 # even/odd halves (test_curate_job_counts_bounded), as measured; the
 # increment with the src0 documents as its benchmark decontaminates
 # against their fetched shingle set (that increment ran 62 jobs, and
-# the corpus 44, while both always took the Bloom prefilter)
-CORPUS_JOBS_MAX = 39
-INCREMENT_JOBS_MAX = 53
-DECON_INCREMENT_JOBS_MAX = 57
+# the corpus 44, while both always took the Bloom prefilter). 39, 53
+# and 57 while near-dup dedup semi-joined the cluster keepers and the
+# increment verified its batch × base candidates in a second pass
+CORPUS_JOBS_MAX = 35
+INCREMENT_JOBS_MAX = 38
+DECON_INCREMENT_JOBS_MAX = 42
 # a packing increment of 30 documents onto a 60-document base
 # (test_packing_increment_job_count); 63 while the packing and index
 # tables were read with schema inference, 60 while the batch's
-# smallest id was a Spark aggregate instead of the manifest's
-PACKING_INCREMENT_JOBS_MAX = 58
+# smallest id was a Spark aggregate instead of the manifest's, 58
+# while the staleness probe aggregated the pieces table
+PACKING_INCREMENT_JOBS_MAX = 44
 
 
 @pytest.fixture(scope="module")
@@ -966,6 +969,19 @@ def test_packing_stage_increment_continues_stream(
     seqs2 = read_sequence_manifest(spark, out)
     assert seqs2.count() == blk2["n_sequences"]
 
+    # the other crash-stale shape: pieces appended, block not advanced
+    # (the recorded totals still match the shards) — again a repack
+    pieces().limit(1).write.mode("append").parquet(f"{out}/packing/pieces")
+    day3 = spark.createDataFrame(
+        [(i, _lines_doc(i), "en", "srcA", 60) for i in range(3000, 3010)],
+        _DOC_SCHEMA,
+    )
+    combined3 = curate_increment(spark, day3, out)
+    assert combined3["packing"]["n_pieces"] == pieces().count()
+    assert rowset(pieces()) == rowset(
+        training.pack_contexts(landed(), ctx_len=CTX)
+    )
+
     # re-curation WITHOUT packing scrubs the stale packing tables —
     # a reader must never load boundaries for a corpus that's gone
     import os
@@ -1307,3 +1323,101 @@ def test_increment_whose_batch_the_gate_empties_keeps_the_manifest(
     manifest = curate_increment(spark, batch, out)
     assert _manifest_rows(manifest) == _manifest_rows(base)
     assert _manifest_rows(manifest) == _manifest_from_read_back(spark, out)
+
+
+def _words(prefix, lo, hi):
+    return " ".join(f"{prefix}{k}" for k in range(lo, hi))
+
+
+def _expected_increment_keep(base, batch, threshold=0.5):
+    """The two-pass rule computed in plain Python from exact 3-word
+    shingle Jaccard over all pairs: drop every batch doc that is not
+    the min id of its within-batch near-dup cluster, then every batch
+    doc with a near-dup in the base."""
+    def sh(text):
+        w = text.split()
+        return {tuple(w[i:i + 3]) for i in range(len(w) - 2)}
+
+    def near(a, b):
+        return len(a & b) / len(a | b) >= threshold
+
+    sets = {i: sh(t) for i, t in batch.items()}
+    comp = {i: i for i in sets}
+    changed = True
+    while changed:  # min-label propagation to the fixed point
+        changed = False
+        for a in sets:
+            for b in sets:
+                if a != b and near(sets[a], sets[b]) and comp[b] < comp[a]:
+                    comp[a], changed = comp[b], True
+    crossdup = {i for i in sets if any(near(sets[i], sh(t)) for t in base.values())}
+    return {i for i in sets if comp[i] == i and i not in crossdup}
+
+
+@pytest.mark.parametrize("cc_cap", [None, 0])
+def test_increment_drop_set_combines_within_batch_and_cross_edges(
+    spark, tmp_path, monkeypatch, cc_cap
+):
+    """One candidate/verify/drop pass keeps the ids of the two-pass
+    rule. In the batch, 1002 is both the within-batch non-keeper of
+    1001 and a near-dup of base doc 10, while 1001 shares no near-dup
+    with the base (Jaccard 0.68, 0.68 and 0.45 on the chain), and
+    1003 keeps in the batch but has base doc 20 as its only
+    near-dup. A cross edge fed into the clusters would drop 1001 too.
+    Run under the driver budget and with the distributed branch."""
+    from climate_data_pipelines_spark.operators import scale
+    from climate_data_pipelines_spark.plans.llm_curation import (
+        curate_corpus,
+        curate_increment,
+    )
+
+    base = {10: _words("t", 18, 68), 20: _words("u", 0, 50)}
+    batch = {
+        1001: _words("t", 0, 50),
+        1002: _words("t", 9, 59),
+        1003: _words("u", 0, 49) + " x0",
+        1004: _words("q", 0, 50),
+    }
+    expected = _expected_increment_keep(base, batch)
+    assert expected == {1001, 1004}
+
+    def frame(docs):
+        return spark.createDataFrame(
+            [(i, t, "en", "srcA", len(t)) for i, t in docs.items()], _DOC_SCHEMA
+        )
+
+    day0, out = str(tmp_path / "day0"), str(tmp_path / "out")
+    frame(base).write.parquet(f"{day0}/documents.parquet")
+    curate_corpus(spark, day0, out, alpha=1.0, tokens_per_shard=300)
+    if cc_cap is not None:
+        monkeypatch.setitem(scale.DRIVER_LOCAL_MAX, "cc", cc_cap)
+    curate_increment(spark, frame(batch), out)
+    kept = {r.doc_id for r in spark.read.parquet(f"{out}/shards").collect()}
+    assert kept == {10, 20} | expected
+    index = spark.read.parquet(f"{out}/dedup_index/signatures")
+    assert {r.doc_id for r in index.select("doc_id").collect()} == kept
+
+
+@pytest.mark.parametrize("cc_cap", [None, 0])
+def test_neardup_dedup_drops_null_ids(spark, monkeypatch, cc_cap):
+    """A document with a null doc_id belongs to no cluster and keeps
+    no slot: it is dropped, whether or not it has a near-dup, on both
+    branches of the drop set."""
+    from climate_data_pipelines_spark.operators import dedup, scale
+    from climate_data_pipelines_spark.plans.llm_curation import neardup_dedup
+    from climate_data_pipelines_spark.queries import MINHASH_N
+
+    if cc_cap is not None:
+        monkeypatch.setitem(scale.DRIVER_LOCAL_MAX, "cc", cc_cap)
+    df = spark.createDataFrame(
+        [
+            (1, _words("t", 0, 50)),
+            (2, _words("t", 0, 49) + " x0"),
+            (None, _words("t", 0, 48) + " x1 x2"),
+            (3, _words("q", 0, 50)),
+            (None, _words("r", 0, 50)),
+        ],
+        "doc_id long, text string",
+    )
+    sigs = dedup.minhash_signatures(df, k=3, n_hashes=MINHASH_N)
+    assert sorted(r.doc_id for r in neardup_dedup(df, sigs).collect()) == [1, 3]
